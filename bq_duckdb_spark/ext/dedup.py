@@ -372,7 +372,6 @@ def minhash_candidate_pairs(
     shingle_k: int = 3,
     max_bucket: int = 1000,
     dedup: bool = True,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """LSH banding: split the signature into ``bands`` bands, hash each
     band, and emit candidate id-pairs that share any band bucket.
@@ -436,7 +435,7 @@ def minhash_candidate_pairs(
     # pair-expansion tail onto ONE task (stage_profile, round 11 — the
     # same coalescing pattern round 10 fixed in setjoin/fuzzy). n stays
     # scale-adaptive via defaultParallelism.
-    n_parts = num_partitions or banded.sparkSession.sparkContext.defaultParallelism
+    n_parts = banded.sparkSession.sparkContext.defaultParallelism
     banded = banded.repartition(n_parts, "band", "bucket")
     w = Window.partitionBy("band", "bucket").orderBy(id_col)
     bucketed = (
@@ -854,7 +853,6 @@ def blocked_pairs_from_fp(
     n_blocks: int = 4,
     max_bucket: int = 1000,
     emit: str = "first_band",
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """(id_a, id_b, hamming) for every pair within ``max_hamming`` on a
     precomputed ``simhash`` column — the banding core both SimHash paths
@@ -895,7 +893,7 @@ def blocked_pairs_from_fp(
     # pin the (band, key) exchange (see minhash_candidate_pairs): keeps
     # the in-bucket pair expansion + xor verify off a single
     # AQE-coalesced task
-    n_parts = num_partitions or banded.sparkSession.sparkContext.defaultParallelism
+    n_parts = banded.sparkSession.sparkContext.defaultParallelism
     banded = banded.repartition(n_parts, "band", "key")
     bucketed = (
         banded.groupBy("band", "key")

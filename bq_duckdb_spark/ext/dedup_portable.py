@@ -180,7 +180,6 @@ def _minhash_pairs_from_shingles(
     bands: int,
     max_bucket: int,
     sh_col: str = "__sh",
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Banding + in-bucket pair expansion over an ALREADY-hashed shingle
     frame ``(id_col, sh_col)`` — split out so _candidate_shingle_pairs
@@ -201,7 +200,7 @@ def _minhash_pairs_from_shingles(
     ).select(id_col, "bb.band", "bb.bucket")
     # pin the (band, bucket) exchange (see dedup.minhash_candidate_pairs):
     # keeps the in-bucket pair expansion off a single AQE-coalesced task
-    n_parts = num_partitions or banded.sparkSession.sparkContext.defaultParallelism
+    n_parts = banded.sparkSession.sparkContext.defaultParallelism
     banded = banded.repartition(n_parts, "band", "bucket")
     bucketed = (
         banded.groupBy("band", "bucket")

@@ -57,7 +57,6 @@ def fuzzy_pairs_d1(
     str_col: str,
     id_col: str,
     max_bucket: int = 1000,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """All pairs of rows whose ``str_col`` values are within Levenshtein
     distance 1 (including exact duplicates, distance 0).
@@ -88,7 +87,7 @@ def fuzzy_pairs_d1(
     # nothing is lost map-side because collect_list partials do not
     # shrink data anyway. REPARTITION_BY_NUM is exempt from AQE
     # coalescing; default n = cluster parallelism.
-    npart = num_partitions or df.sparkSession.sparkContext.defaultParallelism
+    npart = df.sparkSession.sparkContext.defaultParallelism
     bucketed = (
         variants.repartition(npart, "vh")
         .groupBy("vh")

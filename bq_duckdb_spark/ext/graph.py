@@ -204,7 +204,7 @@ def cooccurrence_edges(
     )
 
 
-def triangle_count(edges: DataFrame, num_partitions: int | None = None) -> DataFrame:
+def triangle_count(edges: DataFrame) -> DataFrame:
     """Exact triangle count of an undirected graph given as distinct
     ``(u, v)`` edges with ``u < v`` — one row out: ``n_triangles``.
 
@@ -254,9 +254,8 @@ def triangle_count(edges: DataFrame, num_partitions: int | None = None) -> DataF
     # hash repartition on ``lo`` is the same partitioning the wedge
     # self-join requires, so this replaces its ENSURE_REQUIREMENTS
     # exchange rather than adding one; REPARTITION_BY_NUM is exempt
-    # from AQE coalescing. Default = cluster parallelism; callers with
-    # petabyte edge sets can pass a larger ``num_partitions``.
-    npart = num_partitions or edges.sparkSession.sparkContext.defaultParallelism
+    # from AQE coalescing; n = cluster parallelism.
+    npart = edges.sparkSession.sparkContext.defaultParallelism
     oriented = oriented.repartition(npart, "lo")
     a = oriented.select(F.col("lo"), F.col("hi").alias("h1"))
     b = oriented.select(F.col("lo"), F.col("hi").alias("h2"))

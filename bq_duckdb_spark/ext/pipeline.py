@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from bq_duckdb_spark.operators.prefix import range_prefix
+
 # ---------------------------------------------------------------------------
 # deterministic mix hash (engine-portable: plain 64-bit arithmetic)
 # ---------------------------------------------------------------------------
@@ -201,40 +203,17 @@ def stratified_sample(
     )
 
 
-def seeded_shuffle(
-    df: DataFrame,
-    id_col: str,
-    seed: int = 0,
-    num_partitions: int | None = None,
-) -> DataFrame:
+def seeded_shuffle(df: DataFrame, id_col: str, seed: int = 0) -> DataFrame:
     """Global deterministic training-order shuffle: every row gains
-    ``shuffle_pos`` (0-based), the rank of its mix-hash (ties by id).
-
-    Same two-pass shape as operators/ntile.py's scalable NTILE: a global
-    ``row_number() OVER (ORDER BY hash)`` would funnel the corpus through
-    one task; instead range-partition on the hash, rank locally, and add
-    broadcast per-partition offsets — the only single-partition work is
-    the offsets window over #partitions rows.
+    ``shuffle_pos`` (0-based), the rank of its mix-hash (ties by id),
+    computed by :func:`operators.prefix.range_prefix` instead of a
+    single-task global ``row_number()``.
     """
-    spark = df.sparkSession
-    npart = num_partitions or spark.sparkContext.defaultParallelism
     keyed = df.withColumn("__h", F.expr(mix_hash_expr(id_col, seed)))
-    ranged = keyed.repartitionByRange(npart, F.col("__h"), F.col(id_col)).withColumn(
-        "__pid", F.spark_partition_id()
+    out, _ = range_prefix(
+        keyed, ["__h", id_col], F.row_number(), F.count(F.lit(1)), "shuffle_pos"
     )
-    w_local = Window.partitionBy("__pid").orderBy("__h", id_col)
-    local = ranged.withColumn("__lrn", F.row_number().over(w_local))
-    counts = local.groupBy("__pid").agg(F.count(F.lit(1)).alias("__cnt"))
-    w_off = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = counts.select(
-        "__pid",
-        F.coalesce(F.sum("__cnt").over(w_off), F.lit(0)).cast("long").alias("__off"),
-    )
-    return (
-        local.join(F.broadcast(offsets), "__pid")
-        .withColumn("shuffle_pos", F.col("__off") + F.col("__lrn") - F.lit(1))
-        .drop("__h", "__pid", "__lrn", "__off")
-    )
+    return out.withColumn("shuffle_pos", F.col("shuffle_pos") - 1).drop("__h")
 
 
 # ---------------------------------------------------------------------------

@@ -47,7 +47,6 @@ def exact_jaccard_join(
     id_col: str,
     threshold: float,
     shingle_k: int = 3,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """All pairs (id_a < id_b) with shingle-set Jaccard >= threshold —
     exact: provably identical to the brute-force all-pairs result.
@@ -89,9 +88,7 @@ def exact_jaccard_join(
     # ``repartition(n, doc)`` is the partitioning the windows REQUIRE,
     # so this replaces the ENSURE_REQUIREMENTS exchange rather than
     # adding one, and REPARTITION_BY_NUM is exempt from AQE coalescing.
-    npart = (
-        num_partitions or df.sparkSession.sparkContext.defaultParallelism
-    )
+    npart = df.sparkSession.sparkContext.defaultParallelism
     ranked = (
         ex.join(freq, "s")
         .repartition(npart, "doc")

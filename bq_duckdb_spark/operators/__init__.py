@@ -5,6 +5,9 @@ re-expressed as compositions of DataFrame ops (never driver-side loops):
                    window formulation: one shuffle per key, linear state.
 - ``range_join`` — interval/band joins with broadcast or bucketed
                    strategies.
+- ``prefix``     — exact global rank / running total (range partition +
+                   broadcast per-slice offsets), shared by ntile, ids,
+                   budget, percentile and pipeline.seeded_shuffle.
 - ``skew``       — salted joins for hot keys; bucketed at-rest layout
                    for exchange-free repeated joins.
 """

@@ -4,18 +4,16 @@ budget with the highest-quality documents first", the terminal step of
 most corpus-assembly pipelines.
 
 A naive ``sum(w) OVER (ORDER BY …)`` funnels the whole table through
-one task (Exchange SinglePartition). This operator computes the
-identical running total with the ntile_scalable two-pass shape
-(operators/ntile.py): range-partition on the priority key, local
-cumulative sums per partition, then per-partition totals (one tiny row
-each) turned into broadcast offsets. The only single-partition work is
-the offsets window over #partitions rows.
+one task (Exchange SinglePartition); the running total here comes from
+:func:`operators.prefix.range_prefix` instead.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from bq_duckdb_spark.operators.prefix import range_prefix
 
 
 def with_running_total(
@@ -28,34 +26,11 @@ def with_running_total(
     """Add the exact inclusive running ``weight_col`` total in
     ``order_cols`` order (which must be total — break ties with a
     unique key). Identical row-for-row to the SinglePartition window
-    formulation, computed distributed (range partition + local cumsums
-    + broadcast per-partition offsets)."""
-    spark = df.sparkSession
-    npart = num_partitions or spark.sparkContext.defaultParallelism
-    ranged = df.repartitionByRange(npart, *order_cols).withColumn(
-        "__pid", F.spark_partition_id()
-    )
-    w_local = (
-        Window.partitionBy("__pid")
-        .orderBy(*order_cols)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    local = ranged.withColumn(
-        "__lcum", F.sum(weight_col).over(w_local).cast("long")
-    )
-    totals = ranged.groupBy("__pid").agg(
-        F.sum(weight_col).cast("long").alias("__t")
-    )
-    w_off = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = totals.select(
-        "__pid",
-        F.coalesce(F.sum("__t").over(w_off), F.lit(0)).cast("long").alias("__off"),
-    )
-    return (
-        local.join(F.broadcast(offsets), "__pid")
-        .withColumn(out_col, F.col("__off") + F.col("__lcum"))
-        .drop("__pid", "__lcum", "__off")
-    )
+    formulation, computed distributed."""
+    return range_prefix(
+        df, order_cols, F.sum(weight_col), F.sum(weight_col), out_col,
+        num_partitions=num_partitions,
+    )[0]
 
 
 def take_until_budget(

@@ -4,16 +4,16 @@ total order, without the SinglePartition row_number funnel.
 Corpus assembly needs this constantly (every document gets a stable
 int64 id before sharding/packing). ``monotonically_increasing_id`` is
 partition-dependent and gappy; a global ``row_number() OVER (ORDER BY
-…)`` funnels the table through one task. This is the ntile_scalable /
-take_until_budget two-pass shape: range partition on the order key,
-local row_number per partition, per-partition counts (one tiny row
-each) turned into broadcast offsets.
+…)`` funnels the table through one task. The distributed shape is
+:func:`operators.prefix.range_prefix`.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from bq_duckdb_spark.operators.prefix import range_prefix
 
 
 def assign_stable_ids(
@@ -26,22 +26,8 @@ def assign_stable_ids(
     ``order_cols`` (which must be a total order — break ties with a
     unique key). Deterministic, contiguous, layout-independent —
     identical to the naive global row_number minus one."""
-    spark = df.sparkSession
-    npart = num_partitions or spark.sparkContext.defaultParallelism
-    ranged = df.repartitionByRange(npart, *order_cols).withColumn(
-        "__pid", F.spark_partition_id()
+    out, _ = range_prefix(
+        df, order_cols, F.row_number(), F.count(F.lit(1)), out_col,
+        num_partitions=num_partitions,
     )
-    local = ranged.withColumn(
-        "__lrn", F.row_number().over(Window.partitionBy("__pid").orderBy(*order_cols))
-    )
-    counts = ranged.groupBy("__pid").agg(F.count(F.lit(1)).alias("__cnt"))
-    w_off = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = counts.select(
-        "__pid",
-        F.coalesce(F.sum("__cnt").over(w_off), F.lit(0)).cast("long").alias("__off"),
-    )
-    return (
-        local.join(F.broadcast(offsets), "__pid")
-        .withColumn(out_col, (F.col("__off") + F.col("__lrn") - 1).cast("long"))
-        .drop("__pid", "__lrn", "__off")
-    )
+    return out.withColumn(out_col, F.col(out_col) - 1)

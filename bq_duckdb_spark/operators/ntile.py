@@ -1,26 +1,19 @@
-"""Scalable exact NTILE: range-partition + per-partition rank + offset.
+"""Scalable exact NTILE without the single-task global window: the
+0-based global rank comes from :func:`operators.prefix.range_prefix`
+(which explains the distributed shape), and the tile follows closed-form
+from (rank, n, k): the first ``n mod k`` tiles carry ``n div k + 1``
+rows, the rest ``n div k``.
 
-A global ``NTILE(k) OVER (ORDER BY …)`` funnels the whole table through
-ONE task (Exchange SinglePartition) — a non-starter at 100 TB. This
-operator computes the identical assignment in two distributed passes:
-
-1. ``repartitionByRange`` on the ordering key (sampled range bounds;
-   equal keys land in one partition) and a per-partition ``row_number``
-   — parallel across partitions.
-2. Per-partition row counts (one tiny row per partition) turned into
-   cumulative offsets; global 0-based rank = offset + local rank - 1,
-   and the NTILE tile follows closed-form from (rank, n, k): the first
-   ``n mod k`` tiles carry ``n div k + 1`` rows, the rest ``n div k``.
-
-The only single-partition work is the offsets window over ``#partitions``
-rows. Result is exactly BigQuery/DuckDB ``ntile(k)`` when the ordering
-is total (ties broken by a unique key).
+Result is exactly BigQuery/DuckDB ``ntile(k)`` when the ordering is
+total (ties broken by a unique key).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from bq_duckdb_spark.operators.prefix import range_prefix
 
 
 def ntile_scalable(
@@ -28,30 +21,14 @@ def ntile_scalable(
     order_cols: list[str],
     k: int,
     out_col: str = "tile",
-    num_partitions: int | None = None,
 ) -> DataFrame:
-    spark = df.sparkSession
-    npart = num_partitions or spark.sparkContext.defaultParallelism
-    cols = [F.col(c) for c in order_cols]
-    ranged = df.repartitionByRange(npart, *cols).withColumn(
-        "__pid", F.spark_partition_id()
+    ranked, slices = range_prefix(
+        df, order_cols, F.row_number(), F.count(F.lit(1)), "__r"
     )
-    w_local = Window.partitionBy("__pid").orderBy(*cols)
-    local = ranged.withColumn("__lrn", F.row_number().over(w_local))
-
-    counts = local.groupBy("__pid").agg(F.count(F.lit(1)).alias("__cnt"))
-    # cumulative offset: a window over #partitions rows — trivially small
-    w_off = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = counts.select(
-        "__pid",
-        F.coalesce(F.sum("__cnt").over(w_off), F.lit(0)).cast("long").alias("__off"),
-    )
-    total = counts.agg(F.sum("__cnt").cast("long").alias("__n"))
-
-    out = (
-        local.join(F.broadcast(offsets), "__pid")
-        .crossJoin(F.broadcast(total))
-        .withColumn("__r", F.col("__off") + F.col("__lrn") - F.lit(1))
+    total = slices.agg(F.sum("__t").cast("long").alias("__n"))
+    return (
+        ranked.crossJoin(F.broadcast(total))
+        .withColumn("__r", F.col("__r") - F.lit(1))
         .withColumn("__q", F.expr(f"__n div {k}"))
         .withColumn("__m", F.expr(f"__n % {k}"))
         .withColumn(
@@ -62,6 +39,5 @@ def ntile_scalable(
                 "__m + (__r - __m * (__q + 1)) div greatest(__q, 1)) + 1 AS INT)"
             ),
         )
-        .drop("__pid", "__lrn", "__off", "__n", "__r", "__q", "__m")
+        .drop("__n", "__r", "__q", "__m")
     )
-    return out

@@ -5,20 +5,12 @@ reference's olap_test.clj:269-275 shape) has an inherent parallelism
 ceiling when computed with ``row_number() OVER (PARTITION BY grp ORDER
 BY v)``: the hash exchange lands each whole group in ONE task, so a
 1000-executor cluster sorts 100 TB on three cores. This operator
-computes the identical interpolated percentile with full parallelism,
-reusing the range-partition + per-partition-rank + broadcast-offset
-design of :mod:`bq_duckdb_spark.operators.ntile`:
+computes the identical interpolated percentile with full parallelism:
 
-1. ``repartitionByRange`` on ``(grp, v)`` — sampled range bounds give
-   every task a contiguous slice of one group's value range.
-2. Local ``row_number`` per ``(partition, grp)`` slice; the window's
-   hash exchange on ``(__pid, grp)`` has #partitions x #groups distinct
-   keys, so it stays parallel no matter how few groups exist.
-3. Per-slice counts (one tiny row per (partition, grp)) → cumulative
-   offsets per group; global 0-based rank = offset + local rank - 1.
-   The only single-partition work is the offsets window over
-   #partitions x #groups rows.
-4. The interpolation ``v[floor(k)] * (1-frac) + v[ceil(k)] * frac``
+1. The 0-based rank of each value within its group comes from
+   :func:`operators.prefix.range_prefix` grouped on the key, which
+   stays parallel no matter how few groups exist.
+2. The interpolation ``v[floor(k)] * (1-frac) + v[ceil(k)] * frac``
    with ``k = (n-1) * q`` needs only the <= 2 bracketing ranks per
    (group, quantile): a broadcast of the per-group totals turns the
    selection into a map-side filter, so the final aggregate sees
@@ -34,8 +26,10 @@ exactly like ``ntile_scalable``.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from bq_duckdb_spark.operators.prefix import range_prefix
 
 
 def percentile_cont_scalable(
@@ -43,7 +37,6 @@ def percentile_cont_scalable(
     group_col: str,
     value_col: str,
     quantiles: list[float],
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Exact interpolated percentiles per group: returns one row per
     group with columns ``p_<i>`` for each quantile (caller aliases).
@@ -52,41 +45,21 @@ def percentile_cont_scalable(
     every q in ``quantiles``; NULL values must be pre-filtered (the SQL
     form ignores them, a range partitioner would sort them first).
     A NULL GROUP KEY is a group like any other (SQL ``GROUP BY`` keeps
-    it): the offsets/totals joins below use ``eqNullSafe`` so the NULL
-    group survives — a plain equi-join on ``__g`` would silently drop
-    every row of it (round-9 fix; pinned by
+    it): the offsets join in range_prefix and the totals join below use
+    ``eqNullSafe`` so the NULL group survives — a plain equi-join on
+    ``__g`` would silently drop every row of it (round-9 fix; pinned by
     tests/test_plans.py::test_percentiles_scalable_null_group).
     """
     if not quantiles:
         raise ValueError("quantiles must be non-empty")
     if not all(0.0 <= q <= 1.0 for q in quantiles):
         raise ValueError(f"quantiles must lie in [0, 1], got {quantiles}")
-    spark = df.sparkSession
-    npart = num_partitions or spark.sparkContext.defaultParallelism
     src = df.select(
         F.col(group_col).alias("__g"), F.col(value_col).alias("__v")
     ).where(F.col(value_col).isNotNull())
-
-    ranged = src.repartitionByRange(
-        npart, F.col("__g"), F.col("__v")
-    ).withColumn("__pid", F.spark_partition_id())
-    w_local = Window.partitionBy("__pid", "__g").orderBy("__v")
-    local = ranged.withColumn("__lrn", F.row_number().over(w_local))
-
-    counts = local.groupBy("__pid", "__g").agg(
-        F.count(F.lit(1)).alias("__cnt")
-    )
-    w_off = (
-        Window.partitionBy("__g")
-        .orderBy("__pid")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = counts.select(
-        "__pid",
-        "__g",
-        F.coalesce(F.sum("__cnt").over(w_off), F.lit(0))
-        .cast("long")
-        .alias("__off"),
+    ranked, slices = range_prefix(
+        src, ["__v"], F.row_number(), F.count(F.lit(1)), "__rn",
+        group_cols=("__g",),
     )
     # Round-10: bracket ranks + interpolation weights are per-GROUP
     # constants of (n, q) — compute them HERE (one row per group)
@@ -115,29 +88,17 @@ def percentile_cont_scalable(
             ),
         )
     ]
-    totals = counts.groupBy("__g").agg(
-        F.sum("__cnt").cast("long").alias("__n")
+    totals = slices.groupBy("__g").agg(
+        F.sum("__t").cast("long").alias("__n")
     ).select("__g", "__n", *bracket_cols)
 
-    # eqNullSafe (<=>) keeps these broadcast HASH joins (EqualNullSafe
-    # is an equi-join key for Spark's hash-join extraction) while letting
-    # a NULL group key match its own offsets/totals rows
-    offsets_r = offsets.withColumnRenamed("__pid", "__pid_o").withColumnRenamed(
-        "__g", "__g_o"
-    )
+    # eqNullSafe: see range_prefix
     totals_r = totals.withColumnRenamed("__g", "__g_t")
     ranked = (
-        local.join(
-            F.broadcast(offsets_r),
-            (F.col("__pid") == F.col("__pid_o"))
-            & F.col("__g").eqNullSafe(F.col("__g_o")),
-        )
-        .drop("__pid_o", "__g_o")
-        .join(F.broadcast(totals_r), F.col("__g").eqNullSafe(F.col("__g_t")))
+        ranked.join(F.broadcast(totals_r), F.col("__g").eqNullSafe(F.col("__g_t")))
         .drop("__g_t")
-        .withColumn("__rn", (F.col("__off") + F.col("__lrn") - 1).cast("long"))
+        .withColumn("__rn", F.col("__rn") - 1)
     )
-
     # keep only ranks that can bracket some requested quantile — a plain
     # BIGINT IN-list over the precomputed bracket columns (the decimal
     # k/frac arithmetic ran once per group in ``totals`` above); the
@@ -314,8 +275,8 @@ def percentile_interp_spark(
     in-memory relation: no scan, no re-aggregation, and the final NULL-
     group-preserving LEFT JOIN streams #groups rows instead of a third
     pass over the fact table. Round-10 reclaim of the round-9
-    q_percentiles slowdown (tools/percentile_ab.py: r9 3-scan form vs
-    this; results in PERCENTILE_r10.md). The interpolation arithmetic is
+    q_percentiles slowdown (r9 3-scan form vs this: PERCENTILE_r10.md;
+    re-measure with tools/ab_ref.py). The interpolation arithmetic is
     the same generated text on the same n values, so results are
     bit-identical to the 3-scan form (and to the DuckDB oracle).
     """

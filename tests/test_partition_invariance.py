@@ -153,3 +153,41 @@ def test_assign_stable_ids_invariant_and_contiguous(spark):
     assert a == b
     ids = sorted(x for _, x in a)
     assert ids == list(range(len(ids)))  # contiguous, 0-based, no gaps
+
+
+@pytest.mark.parametrize("nparts", [2, 19])
+def test_range_prefix_grouped_matches_naive_row_number(spark, nparts):
+    """The grouped path of the prefix primitive (offsets per group,
+    null-safe join on the group key) must equal the naive per-group
+    row_number at any range-partition count: a NULL group and a large
+    group that spans several range partitions included."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    from bq_duckdb_spark.operators.prefix import range_prefix
+
+    rows = (
+        [(i, "big", float((i * 7919) % 1000)) for i in range(600)]
+        + [(1000 + i, None, float((i * 31) % 17)) for i in range(40)]
+        + [(2000 + i, "small", float(i)) for i in range(5)]
+    )
+    df = spark.createDataFrame(rows, "id long, g string, v double")
+    got, _ = range_prefix(
+        df, ["v", "id"], F.row_number(), F.count(F.lit(1)), "rn",
+        group_cols=("g",), num_partitions=nparts,
+    )
+    naive = df.withColumn(
+        "rn", F.row_number().over(Window.partitionBy("g").orderBy("v", "id"))
+    )
+    assert sorted(tuple(r) for r in got.collect()) == sorted(
+        tuple(r) for r in naive.collect()
+    )
+    # the big group really is split across range partitions
+    big_parts = (
+        df.repartitionByRange(nparts, "g", "v", "id")
+        .where(F.col("g") == "big")
+        .select(F.spark_partition_id())
+        .distinct()
+        .count()
+    )
+    assert big_parts > 1

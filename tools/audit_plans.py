@@ -57,19 +57,16 @@ _ALLOWED_CARTESIAN = {"q_theta_join", "q_cross_join"}
 # audit until it is either partitioned or justified on this list;
 # stale entries (file refactored, count dropped) fail just as loudly.
 _ALLOWED_UNPARTITIONED_WINDOWS = {
-    # offsets windows over per-partition COUNT/TOTAL tables: the
-    # window input is 1 row per upstream partition, not the data
-    "bq_duckdb_spark/operators/ids.py": 1,
-    "bq_duckdb_spark/operators/ntile.py": 1,
-    "bq_duckdb_spark/operators/budget.py": 1,
-    "bq_duckdb_spark/ext/pipeline.py": 1,
+    # range_prefix's offsets window over per-slice COUNT/TOTAL tables:
+    # the window input is 1 row per (partition, group), not the data
+    "bq_duckdb_spark/operators/prefix.py": 1,
     # cumulative window over the fixed GRID-bucket aggregate (<= GRID
     # rows) feeding the Mann-Whitney U statistic
     "bq_duckdb_spark/ext/mleval.py": 1,
     # rank window over the top_n survivors of TakeOrderedAndProject
     "bq_duckdb_spark/ext/retrieval.py": 1,
     # q_ntile: documented BQ-global-semantics parity entry; twin
-    # q_ntile_scalable is the distributed form (operators/ntile.py)
+    # q_ntile_scalable is the distributed form (operators/prefix.py)
     "__spark_entry__.py": 1,
 }
 

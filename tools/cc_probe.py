@@ -1,9 +1,17 @@
-"""Round-count / per-round-time probe for the connected-components loop.
+"""Round-count / per-job-time probe for the connected-components loop.
 
-Rebuilds the exact pair inputs of the four components-family entries at
-a given SF dir and runs a copy of the CURRENT dedup.connected_components
-loop with per-round timing, so the round count and per-round cost are
-measured rather than inferred (guide §1). Usage:
+Rebuilds the exact pair inputs of the components-family entries at a
+given SF dir and runs the production ``dedup.connected_components``
+under a Spark job group, then reads that group's jobs back from the
+status tracker and store: total wall time, every job's call site and
+duration, and the round count.
+
+Each round ends in one convergence-probe action (``first()`` in
+``connected_components``); under AQE that action's shuffle stages run
+as separate map-stage jobs first, and one action may run as more than
+one job. So jobs are cut into segments, each ending with a run of
+consecutive probe-action jobs: the first segment materializes the
+symmetric edges and initial labels, every later one is a round.
 
   python tools/cc_probe.py [sf_dir] [entry ...]
 """
@@ -47,53 +55,34 @@ def pairs_for(spark, sf_dir: str, entry: str):
     raise SystemExit(f"unknown entry {entry}")
 
 
-def timed_components(pairs, id_a="id_a", id_b="id_b", max_iter=25):
-    """Verbatim copy of the current dedup.connected_components with
-    per-round timing instrumentation."""
-    e = pairs.select(
-        F.col(id_a).cast("long").alias("src"), F.col(id_b).cast("long").alias("dst")
-    )
+def probe_components(spark, pairs, group: str) -> None:
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group, interruptOnCancel=False)
     t0 = time.time()
-    edges = e.union(
-        e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).distinct()
-    edges = edges.localCheckpoint(eager=True)
-    n_edges = edges.count()
-    labels = (
-        edges.select(F.col("src").alias("node"))
-        .distinct()
-        .withColumn("lbl", F.col("node"))
-        .localCheckpoint(eager=True)
-    )
-    prev_sum = labels.agg(F.sum("lbl")).first()[0]
-    print(f"  init: {time.time() - t0:.2f}s  edges={n_edges}")
-    if prev_sum is None:
-        return
-    rounds = 0
-    for _ in range(max_iter):
-        t0 = time.time()
-        nbr_min = (
-            edges.join(labels, edges.src == labels.node)
-            .groupBy("dst")
-            .agg(F.min("lbl").alias("nbl"))
-        )
-        stepped = labels.join(nbr_min, labels.node == nbr_min.dst, "left").select(
-            "node", F.least(F.col("lbl"), F.coalesce("nbl", "lbl")).alias("lbl")
-        )
-        jump = stepped.select(F.col("node").alias("jn"), F.col("lbl").alias("jl"))
-        new_labels = stepped.join(jump, stepped.lbl == jump.jn, "left").select(
-            "node", F.least(F.col("lbl"), F.coalesce("jl", "lbl")).alias("lbl")
-        )
-        new_labels = new_labels.localCheckpoint(eager=True)
-        new_sum = new_labels.agg(F.sum("lbl")).first()[0]
-        labels.unpersist()
-        labels = new_labels
-        rounds += 1
-        print(f"  round {rounds}: {time.time() - t0:.2f}s  sum={new_sum}")
-        if new_sum == prev_sum:
-            break
-        prev_sum = new_sum
-    print(f"  TOTAL rounds={rounds}")
+    try:
+        dedup.connected_components(pairs)
+    finally:
+        sc.setJobGroup("", "")
+    total = time.time() - t0
+    store = sc._jsc.sc().statusStore()
+    segments, cur, prev_probe = [], [], False
+    for jid in sorted(sc.statusTracker().getJobIdsForGroup(group)):
+        jd = store.job(jid)
+        start = jd.submissionTime().get().getTime()
+        end = jd.completionTime().get().getTime()
+        probe = "dedup.py" in jd.name()
+        if prev_probe and not probe:
+            segments.append(cur)
+            cur = []
+        cur.append((start, end))
+        prev_probe = probe
+        print(f"  job {jid}: {end - start} ms  {jd.name()}")
+    segments.append(cur)
+    for i, seg in enumerate(segments):
+        label = "init" if i == 0 else f"round {i}"
+        span = seg[-1][1] - seg[0][0]
+        print(f"  {label}: {len(seg)} jobs, {span} ms")
+    print(f"  TOTAL rounds={len(segments) - 1}  {total:.2f}s")
 
 
 def main():
@@ -106,7 +95,7 @@ def main():
         print(f"== {entry}")
         t0 = time.time()
         p = pairs_for(spark, sf_dir, entry)
-        timed_components(p)
+        probe_components(spark, p, f"cc-probe-{entry}")
         print(f"  entry total {time.time() - t0:.2f}s")
 
 
