@@ -11,6 +11,12 @@ Wire contract mirrored from the reference:
   Internal −32603, Parse −32700)
 - error context ``[method=…, session=…]``: src/error.rs:36-48
 - envelope validation (jsonrpc=="2.0"): src/rpc/handler.rs:45-76
+
+``RpcServer.handle_text`` maps one request text to one response text and
+is what both transports call; a ``bq.query`` result arrives as JSON text
+from the columnar encoder (``result.to_bq_json``) and is spliced into the
+envelope unparsed. ``handle_message`` is its dict view for tests and
+in-process callers.
 """
 
 from __future__ import annotations
@@ -21,7 +27,9 @@ import sys
 import uuid as uuid_mod
 
 from bq_duckdb_spark.engine import SessionManager
-from bq_duckdb_spark.result import to_bq_response
+# to_bq_response (the dict view) stays importable from here:
+# perfbench/traced_server.py wraps it
+from bq_duckdb_spark.result import to_bq_json, to_bq_response  # noqa: F401
 
 # error codes (reference src/error.rs:24-34)
 EXECUTOR_ERROR = -32000
@@ -79,27 +87,39 @@ class RpcServer:
 
     # -- envelope ----------------------------------------------------------
 
-    def handle_message(self, raw: str) -> dict:
+    def handle_text(self, raw: str) -> str:
+        """One request text → one response text, what both transports
+        send. A method returns a dict, or its result already encoded as
+        JSON text (``bq.query``: ``to_bq_json``), which is spliced into the
+        envelope without being parsed again."""
         try:
             req = json.loads(raw)
         except (json.JSONDecodeError, TypeError):
-            return self._err_response(None, PARSE_ERROR, "Parse error")
+            return self._error_text(None, PARSE_ERROR, "Parse error")
         if not isinstance(req, dict) or req.get("jsonrpc") != "2.0":
-            return self._err_response(None, INVALID_REQUEST, "Invalid request")
+            return self._error_text(None, INVALID_REQUEST, "Invalid request")
         rid = req.get("id")
         method = req.get("method", "")
         params = req.get("params") or {}
         fn = self.methods.get(method)
         if fn is None:
-            return self._err_response(rid, METHOD_NOT_FOUND, f"Method not found: {method}")
+            return self._error_text(rid, METHOD_NOT_FOUND, f"Method not found: {method}")
         try:
-            return {"jsonrpc": "2.0", "id": rid, "result": fn(params)}
+            result = fn(params)
+            if not isinstance(result, str):
+                result = json.dumps(result)
         except RpcError as e:
             msg = self._with_context(e.message, method, params.get("sessionId"))
-            return self._err_response(rid, e.code, msg)
+            return self._error_text(rid, e.code, msg)
         except Exception as e:  # any engine error surfaces as Executor
             msg = self._with_context(str(e), method, params.get("sessionId"))
-            return self._err_response(rid, EXECUTOR_ERROR, msg)
+            return self._error_text(rid, EXECUTOR_ERROR, msg)
+        # byte-equal to json.dumps({"jsonrpc": "2.0", "id": rid, "result": ...})
+        return f'{{"jsonrpc": "2.0", "id": {json.dumps(rid)}, "result": {result}}}'
+
+    def handle_message(self, raw: str) -> dict:
+        """Dict view of ``handle_text`` for tests and in-process callers."""
+        return json.loads(self.handle_text(raw))
 
     @staticmethod
     def _with_context(msg: str, method: str, session_id: str | None) -> str:
@@ -111,12 +131,10 @@ class RpcServer:
         return f"{ctx} {msg}"
 
     @staticmethod
-    def _err_response(rid, code: int, message: str) -> dict:
-        return {
-            "jsonrpc": "2.0",
-            "id": rid,
-            "error": {"code": code, "message": message},
-        }
+    def _error_text(rid, code: int, message: str) -> str:
+        return json.dumps(
+            {"jsonrpc": "2.0", "id": rid, "error": {"code": code, "message": message}}
+        )
 
     def _session(self, params: dict):
         sid = params.get("sessionId", "")
@@ -142,10 +160,9 @@ class RpcServer:
         self.manager.destroy_session(s.session_id)
         return {"success": True}
 
-    def query(self, params: dict) -> dict:
+    def query(self, params: dict) -> str:
         s = self._session(params)
-        df = s.query(params["sql"])
-        return to_bq_response(df)
+        return to_bq_json(s.query(params["sql"]))
 
     def explain(self, params: dict) -> dict:
         """Plan a BigQuery-SQL statement without executing it and return
@@ -349,8 +366,7 @@ def serve_stdio(manager: SessionManager) -> None:
         line = line.strip()
         if not line:
             continue
-        resp = server.handle_message(line)
-        sys.stdout.write(json.dumps(resp) + "\n")
+        sys.stdout.write(server.handle_text(line) + "\n")
         sys.stdout.flush()
 
 
@@ -358,16 +374,11 @@ async def start_websocket(manager: SessionManager, host: str = "0.0.0.0", port: 
     """Start the WebSocket transport (reference src/main.rs:181-184) on a
     stdlib RFC 6455 implementation (bq_duckdb_spark.wsproto — no external
     package). Returns the asyncio server; ``port=0`` → ephemeral port.
-    One text frame in → handle_message → one text frame out, the
+    One text frame in → handle_text → one text frame out, the
     reference's handler loop (rpc/handler.rs:11-43)."""
     from bq_duckdb_spark.wsproto import start_ws_server
 
-    server = RpcServer(manager)
-
-    def on_text(msg: str) -> str:
-        return json.dumps(server.handle_message(msg))
-
-    return await start_ws_server(on_text, host, port)
+    return await start_ws_server(RpcServer(manager).handle_text, host, port)
 
 
 async def serve_websocket(manager: SessionManager, host: str = "0.0.0.0", port: int = 8080):

@@ -45,6 +45,15 @@ def accept_key(client_key: str) -> str:
     return base64.b64encode(digest).decode("ascii")
 
 
+def apply_mask(data: bytes, mask: bytes) -> bytes:
+    """XOR ``data`` with the 4-byte ``mask`` repeated (RFC 6455 §5.3) as
+    one big-integer XOR over the whole buffer, not a Python step per
+    byte. Masking and unmasking are the same operation."""
+    n = len(data)
+    key = (mask * (n // 4 + 1))[:n]
+    return (int.from_bytes(data, "big") ^ int.from_bytes(key, "big")).to_bytes(n, "big")
+
+
 def encode_frame(opcode: int, payload: bytes, mask: bytes | None = None) -> bytes:
     """Build one FIN frame. ``mask`` is only used by test clients —
     servers always send unmasked (§5.1)."""
@@ -61,7 +70,7 @@ def encode_frame(opcode: int, payload: bytes, mask: bytes | None = None) -> byte
         head += struct.pack(">Q", n)
     if mask:
         head += mask
-        payload = bytes(b ^ mask[i % 4] for i, b in enumerate(payload))
+        payload = apply_mask(payload, mask)
     return bytes(head) + payload
 
 
@@ -84,7 +93,7 @@ async def read_frame(
     mask = await reader.readexactly(4) if masked else None
     data = await reader.readexactly(n)
     if mask:
-        data = bytes(b ^ mask[i % 4] for i, b in enumerate(data))
+        data = apply_mask(data, mask)
     return fin, opcode, data
 
 

@@ -27,8 +27,8 @@ _UUID_RE = re.compile(
 
 
 class StdioClient:
-    def __init__(self):
-        env = dict(os.environ, SPARK_GRAFT_CPUS="8")
+    def __init__(self, **env_overrides):
+        env = dict(os.environ, SPARK_GRAFT_CPUS="8", **env_overrides)
         self.proc = subprocess.Popen(
             [sys.executable, "-m", "bq_duckdb_spark.server", "--transport", "stdio"],
             cwd=REPO,
@@ -142,6 +142,43 @@ def test_struct_golden(client, sid):
     )
 
 
+def test_mixed_types_golden(client, sid):
+    """Three rows through the columnar encoder and the envelope splice: a
+    NULL, NaN, a decimal, timestamps with and without microseconds, bytes,
+    an array and a struct, every value text and separator pinned."""
+    line = client.call_raw(
+        "bq.query",
+        {
+            "sessionId": sid,
+            "sql": "SELECT x AS id, IF(x = 2, NULL, CONCAT('row', CAST(x AS STRING))) AS label, "
+            "IF(x = 3, CAST('NaN' AS FLOAT64), x / 4) AS ratio, "
+            "CAST(x * 1.25 AS NUMERIC) AS amount, "
+            "IF(x = 1, TIMESTAMP '2024-01-02 03:04:05.123456', TIMESTAMP '2024-01-02 03:04:05') AS ts, "
+            "CAST(CONCAT('b', CAST(x AS STRING)) AS BYTES) AS raw, [x, x * 10] AS pair, "
+            "STRUCT(x AS k, x > 1 AS big) AS info FROM UNNEST([1, 2, 3]) AS x ORDER BY x",
+        },
+    )
+    rid = json.loads(line)["id"]
+    assert line == (
+        '{"jsonrpc": "2.0", "id": %d, "result": {"kind": "bigquery#queryResponse", '
+        '"schema": {"fields": [{"name": "id", "type": "INT64"}, '
+        '{"name": "label", "type": "STRING"}, {"name": "ratio", "type": "FLOAT64"}, '
+        '{"name": "amount", "type": "NUMERIC"}, {"name": "ts", "type": "TIMESTAMP"}, '
+        '{"name": "raw", "type": "BYTES"}, {"name": "pair", "type": "ARRAY<INT64>"}, '
+        '{"name": "info", "type": "STRUCT"}]}, '
+        '"rows": [{"f": [{"v": 1}, {"v": "row1"}, {"v": 0.25}, {"v": "1.250000000"}, '
+        '{"v": "2024-01-02 03:04:05.123456"}, {"v": "YjE="}, {"v": [1, 10]}, '
+        '{"v": {"k": 1, "big": false}}]}, '
+        '{"f": [{"v": 2}, {"v": null}, {"v": 0.5}, {"v": "2.500000000"}, '
+        '{"v": "2024-01-02 03:04:05"}, {"v": "YjI="}, {"v": [2, 20]}, '
+        '{"v": {"k": 2, "big": true}}]}, '
+        '{"f": [{"v": 3}, {"v": "row3"}, {"v": "nan"}, {"v": "3.750000000"}, '
+        '{"v": "2024-01-02 03:04:05"}, {"v": "YjM="}, {"v": [3, 30]}, '
+        '{"v": {"k": 3, "big": true}}]}], '
+        '"totalRows": "3", "jobComplete": true}}' % rid
+    )
+
+
 def test_error_propagation_golden_envelope(client, sid):
     """client_test.clj:110-116 — a failing query surfaces as a JSON-RPC
     error with the Executor code and [method=…, session=…] context. The
@@ -229,3 +266,24 @@ def test_destroy_session_golden(client, sid):
     line = client.call_raw("bq.destroySession", {"sessionId": sid})
     rid = json.loads(line)["id"]
     assert line == '{"jsonrpc": "2.0", "id": %d, "result": {"success": true}}' % rid
+
+
+def test_timestamp_on_non_utc_host():
+    """TIMESTAMP values are rendered in the session zone (UTC), not the
+    host's: on a New York host the value and its EXTRACT(HOUR) agree."""
+    c = StdioClient(TZ="America/New_York")
+    try:
+        sid = json.loads(c.call_raw("bq.createSession"))["result"]["sessionId"]
+        line = c.call_raw(
+            "bq.query",
+            {
+                "sessionId": sid,
+                "sql": "SELECT TIMESTAMP '2024-01-02 03:04:05' AS t, "
+                "EXTRACT(HOUR FROM TIMESTAMP '2024-01-02 03:04:05') AS h",
+            },
+        )
+        assert json.loads(line)["result"]["rows"] == [
+            {"f": [{"v": "2024-01-02 03:04:05"}, {"v": 3}]}
+        ]
+    finally:
+        c.close()
