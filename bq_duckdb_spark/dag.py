@@ -9,8 +9,12 @@ itself rather than delegating to its SQL engine:
   resolve (pipeline.rs:114-172).
 - G4 topo sort into levels, alphabetical within a level, "Circular
   dependency detected" on cycles (pipeline.rs:424-481).
-- G5 serial deterministic run / G6 worker-pool parallel run capped at
-  ``max_concurrency`` (default 8, pipeline.rs:48,254-346).
+- G5/G6 one dependency-driven scheduler: tables start in level order as
+  soon as their dependencies succeeded, at most ``workers`` at a time.
+  The reference keeps two run loops, one per backend; here one worker
+  is its deterministic serial run (pipeline.rs:222-252) and
+  ``parallel=True`` its worker pool capped at ``max_concurrency``
+  (default 8, pipeline.rs:48,254-346).
 - G7 target-subset closure (pipeline.rs:394-414), G10 retry of
   failed+skipped (manager.rs:102-160), G8/G9 materialization semantics:
   derived = full snapshot replace; source = create-if-not-exists +
@@ -19,9 +23,13 @@ itself rather than delegating to its SQL engine:
 
 from __future__ import annotations
 
+import hashlib
+import heapq
 import threading
-from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
+from concurrent.futures import FIRST_COMPLETED, Executor, Future, ThreadPoolExecutor, wait
 from dataclasses import dataclass, field
+
+from pyspark import inheritable_thread_target
 
 from bq_duckdb_spark.dialect import extract_dependencies
 
@@ -72,15 +80,29 @@ class PipelineResult:
         return d
 
 
+class _InlineExecutor(Executor):
+    """Runs each task on the calling thread inside ``submit``, so a
+    one-worker run keeps the caller's thread-local state (Spark job tags
+    and local properties, tracing span stacks)."""
+
+    def submit(self, fn, /, *args, **kwargs) -> Future:
+        fut: Future = Future()
+        try:
+            fut.set_result(fn(*args, **kwargs))
+        except Exception as e:
+            fut.set_exception(e)
+        return fut
+
+
 class Pipeline:
-    def __init__(self, session, materialize_mode: str = "table"):
+    def __init__(self, session):
         self.session = session
-        self.tables: dict[str, PipelineTable] = {}  # key: name as registered
+        self.tables: dict[str, PipelineTable] = {}  # key: lower-cased name
         self._lock = threading.RLock()
-        self.materialize_mode = materialize_mode
-        # incremental-run bookkeeping (beyond the reference): fingerprint
-        # at last successful materialization per derived table, and a
-        # monotone version per source bumped on every append
+        # incremental-run bookkeeping (beyond the reference), keyed like
+        # ``tables``: fingerprint at last successful materialization per
+        # derived table, and a monotone version per source bumped on
+        # every append
         self._last_fp: dict[str, str] = {}
         self._source_versions: dict[str, int] = {}
 
@@ -90,11 +112,13 @@ class Pipeline:
         """Upsert table definitions. Each def: {"name", "sql"?, "schema"?,
         "rows"?}. After the batch, dependencies are re-inferred for EVERY
         registered table so forward references resolve regardless of
-        registration order (pipeline.rs:114-172)."""
+        registration order (pipeline.rs:114-172). Names match
+        case-insensitively; the value keeps the latest registered
+        spelling (pipeline.rs:1541-1554)."""
         with self._lock:
             for d in defs:
                 name = d["name"]
-                self.tables[self._canonical(name)] = PipelineTable(
+                self.tables[name.lower()] = PipelineTable(
                     name=name,
                     sql=d.get("sql"),
                     columns=d.get("schema"),
@@ -103,14 +127,6 @@ class Pipeline:
                 )
             self._reinfer_all_dependencies()
             return self.get_dag()
-
-    def _canonical(self, name: str) -> str:
-        # case-insensitive matching (pipeline.rs:1541-1554) — keep the
-        # registered spelling in the value, match on lower-case key
-        for key in self.tables:
-            if key.lower() == name.lower():
-                return key
-        return name
 
     def _reinfer_all_dependencies(self) -> None:
         known = [t.name for t in self.tables.values()]
@@ -134,8 +150,7 @@ class Pipeline:
             indeg = {}
             dependents: dict[str, list[str]] = {n: [] for n in names}
             for n in names:
-                t = self.tables[self._canonical(n)]
-                deps = [d for d in t.dependencies if d in names]
+                deps = [d for d in self.tables[n.lower()].dependencies if d in names]
                 indeg[n] = len(deps)
                 for d in deps:
                     dependents[d].append(n)
@@ -161,10 +176,9 @@ class Pipeline:
     def _closure(self, targets: list[str]) -> set[str]:
         with self._lock:
             out: set[str] = set()
-            stack = [self._canonical(t) for t in targets]
+            stack = list(targets)
             while stack:
-                key = stack.pop()
-                t = self.tables.get(self._canonical(key))
+                t = self.tables.get(stack.pop().lower())
                 if t is None or t.name in out:
                     continue
                 out.add(t.name)
@@ -180,22 +194,13 @@ class Pipeline:
         parallel: bool = False,
         max_concurrency: int = DEFAULT_MAX_CONCURRENCY,
     ) -> PipelineResult:
+        workers = max_concurrency if parallel else 1
         subset = self._closure(targets) if targets else None
-        result = self._run_subset(subset, parallel, max_concurrency)
+        result = self._run_subset(subset, workers)
         for _ in range(retry_count):
             if result.success:
                 break
-            retry_set = {f["table"] for f in result.failed} | set(result.skipped)
-            retry_res = self._run_subset(retry_set, parallel, max_concurrency)
-            merged_succeeded = sorted(
-                set(result.succeeded) | set(retry_res.succeeded), key=str.lower
-            )
-            result = PipelineResult(
-                success=retry_res.success,
-                succeeded=merged_succeeded,
-                failed=retry_res.failed,
-                skipped=retry_res.skipped,
-            )
+            result = self._retry(result, workers)
         return result
 
     def run_incremental(
@@ -223,65 +228,42 @@ class Pipeline:
         and re-running the warehouse; the fingerprint map is
         tables-sized driver state.
         """
+        workers = max_concurrency if parallel else 1
         with self._lock:
-            subset = self._closure(targets) if targets else set(self.tables.keys())
-            result = PipelineResult(success=True)
-            # 1. sources with pending rows append (reference run semantics)
-            for key in sorted(subset, key=str.lower):
-                t = self.tables[self._canonical(key)]
-                if not t.is_source:
-                    continue
-                if t.rows:
-                    try:
-                        self.execute_table(t)
-                        self._source_versions[self._canonical(key)] = (
-                            self._source_versions.get(self._canonical(key), 0) + 1
-                        )
-                        result.succeeded.append(t.name)
-                    except Exception as e:
-                        result.failed.append({"table": t.name, "error": str(e)})
-                else:
-                    # ensure the (empty) source table exists for dependents
-                    self.session.create_table(
-                        t.name, t.columns or [], if_not_exists=True
-                    )
-            # 2. fingerprint every subset member against the last run
+            names = self._closure(targets) if targets else {t.name for t in self.tables.values()}
+            tables = [self.tables[n.lower()] for n in names]
+            # 1. sources with pending rows append (reference run
+            # semantics; a failed append keeps the source's version); a
+            # source without rows only has to exist for its dependents
+            for t in tables:
+                if t.is_source and not t.rows:
+                    self.session.create_table(t.name, t.columns or [], if_not_exists=True)
+            appends = {t.name for t in tables if t.is_source and t.rows}
+            appended = self._run_subset(appends, workers)
+            for name in appended.succeeded:
+                key = name.lower()
+                self._source_versions[key] = self._source_versions.get(key, 0) + 1
+            # 2. fingerprint every derived subset member against the last run
             memo: dict[str, str] = {}
+            derived = [t.name for t in tables if not t.is_source]
             stale = {
-                key
-                for key in subset
-                if not self.tables[self._canonical(key)].is_source
-                and self._fingerprint(key, memo) != self._last_fp.get(self._canonical(key))
+                n for n in derived if self._fingerprint(n, memo) != self._last_fp.get(n.lower())
             }
-            result.reused = sorted(
-                (
-                    self.tables[self._canonical(k)].name
-                    for k in subset
-                    if not self.tables[self._canonical(k)].is_source and k not in stale
-                ),
-                key=str.lower,
+            # 3. recompute only the stale tables, normal skip semantics
+            rebuilt = self._run_subset(stale, workers)
+            for name in rebuilt.succeeded:
+                self._last_fp[name.lower()] = memo[name.lower()]
+            failed = appended.failed + rebuilt.failed
+            return PipelineResult(
+                success=not failed and not rebuilt.skipped,
+                succeeded=sorted(appended.succeeded + rebuilt.succeeded, key=str.lower),
+                failed=failed,
+                skipped=rebuilt.skipped,
+                reused=sorted((n for n in derived if n not in stale), key=str.lower),
             )
-            # 3. recompute only the stale closure, normal skip semantics
-            if stale:
-                sub_res = self._run_subset(stale, parallel, max_concurrency)
-                result.succeeded = sorted(
-                    set(result.succeeded) | set(sub_res.succeeded), key=str.lower
-                )
-                result.failed.extend(sub_res.failed)
-                result.skipped = sub_res.skipped
-                for name in sub_res.succeeded:
-                    key = self._canonical(name)
-                    if not self.tables[key].is_source:
-                        self._last_fp[key] = memo[key] if key in memo else (
-                            self._fingerprint(key, memo)
-                        )
-            result.success = not result.failed and not result.skipped
-            return result
 
     def _fingerprint(self, name: str, memo: dict[str, str]) -> str:
-        import hashlib
-
-        key = self._canonical(name)
+        key = name.lower()
         if key in memo:
             return memo[key]
         t = self.tables[key]
@@ -299,100 +281,84 @@ class Pipeline:
 
     def retry_failed(self, prev: PipelineResult, parallel: bool = False) -> PipelineResult:
         """Standalone ``bq.retryDag`` (pipeline.rs:188-201)."""
+        return self._retry(prev, DEFAULT_MAX_CONCURRENCY if parallel else 1)
+
+    def _retry(self, prev: PipelineResult, workers: int) -> PipelineResult:
+        """Re-run ``prev``'s failed and skipped tables; the succeeded list
+        merges both runs, alphabetically."""
         retry_set = {f["table"] for f in prev.failed} | set(prev.skipped)
         if not retry_set:
             return PipelineResult(success=True, succeeded=prev.succeeded)
-        res = self._run_subset(retry_set, parallel, DEFAULT_MAX_CONCURRENCY)
+        res = self._run_subset(retry_set, workers)
         res.succeeded = sorted(set(prev.succeeded) | set(res.succeeded), key=str.lower)
         return res
 
-    def _run_subset(
-        self, subset: set[str] | None, parallel: bool, max_concurrency: int
-    ) -> PipelineResult:
-        levels = self.topological_sort_levels(subset)
-        if parallel:
-            return self._run_streaming(levels, max_concurrency)
-        return self._run_serial(levels)
+    def _run_subset(self, subset: set[str] | None, workers: int) -> PipelineResult:
+        """Run ``subset`` (every table when None) on one dependency-driven
+        loop (pipeline.rs:222-381). A table starts once its in-subset
+        dependencies succeeded, lowest level-order position first, with
+        at most ``workers`` in flight; a table whose dependency failed or
+        was skipped is skipped. Result lists are in level order.
 
-    def _run_serial(self, levels: list[list[str]]) -> PipelineResult:
-        """Level-by-level, alphabetical — strictly deterministic
-        (pipeline.rs:222-252)."""
-        result = PipelineResult(success=True)
-        blocked: set[str] = set()
-        for level in levels:
-            for name in level:  # already alphabetical
-                t = self.tables[self._canonical(name)]
-                if any(d in blocked for d in t.dependencies):
-                    result.skipped.append(name)
-                    blocked.add(name)
-                    continue
-                try:
-                    self.execute_table(t)
-                    result.succeeded.append(name)
-                except Exception as e:
-                    result.failed.append({"table": name, "error": str(e)})
-                    blocked.add(name)
-        result.success = not result.failed and not result.skipped
-        return result
+        One worker runs each table on the calling thread. More run in a
+        thread pool whose threads inherit the caller's Spark job tags and
+        local properties; Spark's scheduler is thread-safe, so concurrent
+        ``spark.sql`` actions simply become concurrent jobs."""
+        if workers < 1:
+            raise ValueError(f"max_concurrency must be at least 1, got {workers}")
+        order = [n for level in self.topological_sort_levels(subset) for n in level]
+        rank = {n: i for i, n in enumerate(order)}
+        deps = {n: [d for d in self.tables[n.lower()].dependencies if d in rank] for n in order}
+        dependents: dict[str, list[str]] = {n: [] for n in order}
+        for n in order:
+            for d in deps[n]:
+                dependents[d].append(n)
+        waiting = {n: len(deps[n]) for n in order}
+        status: dict[str, str] = {}
+        errors: dict[str, str] = {}
+        ready = [rank[n] for n in order if not deps[n]]  # ascending: a heap
 
-    def _run_streaming(self, levels: list[list[str]], max_concurrency: int) -> PipelineResult:
-        """Worker-pool run: up to ``max_concurrency`` tables in flight; as
-        each completes, newly-ready tables spawn; a failure immediately
-        skips all transitive dependents (pipeline.rs:254-381). Spark's
-        scheduler is thread-safe, so concurrent ``spark.sql`` actions
-        simply become concurrent jobs."""
-        names = [n for lvl in levels for n in lvl]
-        name_set = set(names)
-        pending_deps = {
-            n: {d for d in self.tables[self._canonical(n)].dependencies if d in name_set}
-            for n in names
-        }
-        dependents: dict[str, set[str]] = {n: set() for n in names}
-        for n in names:
-            for d in pending_deps[n]:
-                dependents[d].add(n)
-        result = PipelineResult(success=True)
-        blocked: set[str] = set()
-        futures = {}
-        done_set: set[str] = set()
-
-        def skip_transitively(root: str):
-            stack = list(dependents[root])
+        def settle(name: str, state: str) -> None:
+            status[name] = state
+            stack = [name]
             while stack:
-                m = stack.pop()
-                if m in blocked or m in done_set:
-                    continue
-                blocked.add(m)
-                result.skipped.append(m)
-                stack.extend(dependents[m])
+                for m in dependents[stack.pop()]:
+                    waiting[m] -= 1
+                    if waiting[m]:
+                        continue
+                    if all(status[d] == "succeeded" for d in deps[m]):
+                        heapq.heappush(ready, rank[m])
+                    else:
+                        status[m] = "skipped"
+                        stack.append(m)
 
-        with ThreadPoolExecutor(max_workers=max_concurrency) as pool:
-            ready = sorted([n for n in names if not pending_deps[n]], key=str.lower)
-            for n in ready:
-                futures[pool.submit(self.execute_table, self.tables[self._canonical(n)])] = n
-            while futures:
-                done, _ = wait(list(futures), return_when=FIRST_COMPLETED)
+        running: dict[Future, str] = {}
+        pooled = workers > 1
+        with ThreadPoolExecutor(workers) if pooled else _InlineExecutor() as pool:
+            while ready or running:
+                while ready and len(running) < workers:
+                    name = order[heapq.heappop(ready)]
+                    fn = self.execute_table
+                    if pooled:
+                        # wrapped per table: each call gets its own copy of
+                        # the caller's local properties; with one shared
+                        # copy, concurrent tables overwrite each other's
+                        # SQL execution id and jobs land under wrong queries
+                        fn = inheritable_thread_target(self.session.spark)(fn)
+                    running[pool.submit(fn, self.tables[name.lower()])] = name
+                done, _ = wait(running, return_when=FIRST_COMPLETED)
                 for fut in done:
-                    n = futures.pop(fut)
-                    done_set.add(n)
+                    name = running.pop(fut)
                     err = fut.exception()
                     if err is not None:
-                        result.failed.append({"table": n, "error": str(err)})
-                        skip_transitively(n)
-                    else:
-                        result.succeeded.append(n)
-                        for m in sorted(dependents[n], key=str.lower):
-                            if m in blocked:
-                                continue
-                            pending_deps[m].discard(n)
-                            if not pending_deps[m]:
-                                futures[
-                                    pool.submit(
-                                        self.execute_table, self.tables[self._canonical(m)]
-                                    )
-                                ] = m
-        result.success = not result.failed and not result.skipped
-        return result
+                        errors[name] = str(err)
+                    settle(name, "succeeded" if err is None else "failed")
+        return PipelineResult(
+            success=all(s == "succeeded" for s in status.values()),
+            succeeded=[n for n in order if status[n] == "succeeded"],
+            failed=[{"table": n, "error": errors[n]} for n in order if status[n] == "failed"],
+            skipped=[n for n in order if status[n] == "skipped"],
+        )
 
     def execute_table(self, t: PipelineTable) -> None:
         """Materialize one table (pipeline.rs:511-593).
@@ -408,7 +374,7 @@ class Pipeline:
                 self.session.insert(t.name, t.rows)
         else:
             df = self.session.query(t.sql)
-            self.session.materialize(t.name, df, mode=self.materialize_mode)
+            self.session.materialize(t.name, df)
         self._run_table_tests(t)
 
     # -- data tests (extension beyond the reference) -----------------------

@@ -828,9 +828,6 @@ def extract_cte_names(sql: str) -> list[str]:
 # dependency inference (reference pipeline.rs:595-614, 690-723 semantics)
 # ---------------------------------------------------------------------------
 
-_REF_CONTEXT_RE_TMPL = r"(?:\bFROM\b|\bJOIN\b|\bINTO\b|,)[\s(]*(?:[A-Za-z_][\w.]*[\s(]*,[\s(]*)*{name}(?![\w.])"
-
-
 def is_table_referenced(sql: str, table: str) -> bool:
     """Word-boundary, case-insensitive check that ``table`` appears in a
     FROM / JOIN / comma-list position (so ``users`` does not match

@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from bq_duckdb_spark import types as bqtypes
+from bq_duckdb_spark.dialect import _find_top_level_keyword
 from bq_duckdb_spark.dialect import _split_top_level_args as _split_top_level_commas
 from bq_duckdb_spark.dialect import transpile
 
@@ -160,6 +161,18 @@ class Session:
             df.createOrReplaceTempView(view)
             entry = TableEntry(name=name, view=view, columns=bqtypes.columns_from_schema(df.schema))
             self.tables[name.lower()] = entry
+            return entry
+
+    def _register_replacing(self, name: str, df: DataFrame) -> TableEntry:
+        """Register ``df`` — a rewritten snapshot or a fresh load that
+        no longer reads the old entry's files — as ``name``, and delete
+        the insert directory the old entry's appended rows lived in.
+        (``register_dataframe`` keeps it: its argument may read it.)"""
+        with self._lock:
+            old = self.tables.get(name.lower())
+            entry = self.register_dataframe(name, df)
+            if old is not None and old.insert_dir:
+                shutil.rmtree(old.insert_dir, ignore_errors=True)
             return entry
 
     def create_table(
@@ -401,25 +414,21 @@ class Session:
         s_alias = m.group(4) or src_name.split(".")[-1]
         rest = m.group(5)
 
-        # split the ON condition from the WHEN clauses at top level
-        when_idx = None
-        pat = re.compile(r"\bWHEN\b", re.IGNORECASE)
-        i = 0
-        while i < len(rest):
-            if rest[i] in "'\"`":
-                from bq_duckdb_spark.dialect import _skip_string
-
-                i = _skip_string(rest, i)
-                continue
-            mm = pat.match(rest, i)
-            if mm:
-                when_idx = i
-                break
-            i += 1
-        if when_idx is None:
+        # clauses start at WHEN [NOT] MATCHED at paren depth 0 outside
+        # string literals — a CASE WHEN in the condition or a value is
+        # not a clause boundary
+        clause_kw = r"WHEN\s+(?:NOT\s+)?MATCHED"
+        starts = []
+        i = _find_top_level_keyword(rest, clause_kw)
+        while i >= 0:
+            starts.append(i)
+            i = _find_top_level_keyword(rest, clause_kw, i + len("WHEN"))
+        if not starts:
             raise ValueError("MERGE requires at least one WHEN clause")
-        cond_text = rest[:when_idx].strip()
-        clauses = re.split(r"\bWHEN\b", rest[when_idx:], flags=re.IGNORECASE)[1:]
+        cond_text = rest[: starts[0]].strip()
+        clauses = [
+            rest[a + len("WHEN") : b] for a, b in zip(starts, starts[1:] + [len(rest)])
+        ]
 
         update_set = delete_matched = insert_clause = None
         for cl in clauses:
@@ -880,17 +889,13 @@ class Session:
         self,
         name: str,
         df: DataFrame,
-        mode: str = "table",
         partition_by: str | None = None,
         cluster_by: list[str] | None = None,
     ) -> int:
-        """Replace ``name`` with a physical snapshot of ``df``.
-
-        mode="table": write parquet under the session warehouse and re-read
-        — a true snapshot that scales (the cluster equivalent is
-        ``saveAsTable(mode="overwrite")``). mode="view": register the
-        DataFrame lazily (fast for tiny DAG tables; not a snapshot).
-        Returns the snapshot row count.
+        """Replace ``name`` with a physical snapshot of ``df``: write
+        parquet under the session warehouse and re-read — a true snapshot
+        that scales (the cluster equivalent is
+        ``saveAsTable(mode="overwrite")``). Returns the snapshot row count.
 
         When the table carries a BigQuery storage spec (``PARTITION
         BY`` / ``CLUSTER BY`` DDL, or explicit arguments here), the
@@ -928,11 +933,6 @@ class Session:
             if partition_by is None and cluster_by is None and prev is not None:
                 partition_by, cluster_by = prev.partition_by, prev.cluster_by
             cluster_by = list(cluster_by or [])
-            if mode == "view":
-                entry = self.register_dataframe(name, df)
-                entry.partition_by = partition_by
-                entry.cluster_by = cluster_by
-                return self.spark.table(entry.view).count()
             path = os.path.join(self._warehouse, _sanitize(name.lower()))
             tmp = path + "__tmp"
             out = df
@@ -963,7 +963,7 @@ class Session:
                         for f in df.schema.fields
                     ]
                 )
-            entry = self.register_dataframe(name, snap)
+            entry = self._register_replacing(name, snap)
             entry.partition_by = partition_by
             entry.cluster_by = cluster_by
             return self.spark.table(entry.view).count()
@@ -1083,13 +1083,10 @@ class Session:
                 df[f.name].cast(f.dataType).alias(f.name) for f in schema.fields
             ]
             df = df.select(projected)
-        entry = self.register_dataframe(name, df)
-        if columns:
-            entry.columns = list(columns)
-        return self.spark.table(entry.view).count()
+        return self._load_via(name, df, columns)
 
     def _load_via(self, name: str, df: DataFrame, columns: list[dict] | None) -> int:
-        entry = self.register_dataframe(name, df)
+        entry = self._register_replacing(name, df)
         if columns:
             entry.columns = list(columns)
         return self.spark.table(entry.view).count()

@@ -246,46 +246,35 @@ class RpcServer:
 
     def load_parquet(self, params: dict) -> dict:
         s = self._session(params)
-        try:
-            count = s.load_parquet(
-                params["tableName"], params["path"], params.get("schema")
-            )
-        except FileNotFoundError as e:
-            raise RpcError(LOADER_ERROR, str(e))
+        count = self._loader_call(
+            s.load_parquet, params["tableName"], params["path"], params.get("schema")
+        )
         return {"success": True, "rowCount": count}
 
     def load_csv(self, params: dict) -> dict:
         s = self._session(params)
-        try:
-            count = s.load_csv(
-                params["tableName"],
-                params["path"],
-                params.get("schema"),
-                header=bool(params.get("header", True)),
-                delimiter=params.get("fieldDelimiter", ","),
-            )
-        except FileNotFoundError as e:
-            raise RpcError(LOADER_ERROR, str(e))
+        count = self._loader_call(
+            s.load_csv,
+            params["tableName"],
+            params["path"],
+            params.get("schema"),
+            header=bool(params.get("header", True)),
+            delimiter=params.get("fieldDelimiter", ","),
+        )
         return {"success": True, "rowCount": count}
 
     def load_json(self, params: dict) -> dict:
         s = self._session(params)
-        try:
-            count = s.load_json(
-                params["tableName"], params["path"], params.get("schema")
-            )
-        except FileNotFoundError as e:
-            raise RpcError(LOADER_ERROR, str(e))
+        count = self._loader_call(
+            s.load_json, params["tableName"], params["path"], params.get("schema")
+        )
         return {"success": True, "rowCount": count}
 
     def load_orc(self, params: dict) -> dict:
         s = self._session(params)
-        try:
-            count = s.load_orc(
-                params["tableName"], params["path"], params.get("schema")
-            )
-        except FileNotFoundError as e:
-            raise RpcError(LOADER_ERROR, str(e))
+        count = self._loader_call(
+            s.load_orc, params["tableName"], params["path"], params.get("schema")
+        )
         return {"success": True, "rowCount": count}
 
     def list_tables(self, params: dict) -> dict:
@@ -323,9 +312,9 @@ class RpcServer:
         s = self._session(params)
         return {"tables": s.get_tables_in_dataset(params["project"], params["dataset"])}
 
-    def _loader_call(self, fn, *args):
+    def _loader_call(self, fn, *args, **kwargs):
         try:
-            return fn(*args)
+            return fn(*args, **kwargs)
         except FileNotFoundError as e:
             raise RpcError(LOADER_ERROR, str(e))
 

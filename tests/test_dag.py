@@ -208,6 +208,39 @@ def test_parallel_failure_skips(session):
     assert res.skipped == ["down"]
 
 
+def test_dag_jobs_carry_callers_job_tag(session):
+    """A job tag set on the calling thread reaches every DAG job, in a
+    serial and in a worker-pool run, so cancelling by tag reaches them."""
+    sc = session.spark.sparkContext
+    conv = sc._jvm.scala.jdk.javaapi.CollectionConverters
+
+    def job_tags() -> dict[int, list[str]]:
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs = conv.asJava(sc._jsc.sc().statusStore().jobsList(None))
+        return {j.jobId(): list(conv.asJava(j.jobTags())) for j in jobs}
+
+    session.pipeline.register(
+        [
+            {"name": "a", "schema": [{"name": "v", "type": "INT64"}], "rows": [[1]]},
+            {"name": "b", "sql": "SELECT v * 2 AS v FROM a"},
+            {"name": "c", "sql": "SELECT v + 1 AS v FROM a"},
+            {"name": "d", "sql": "SELECT b.v + c.v AS v FROM b, c"},
+        ]
+    )
+    for parallel in (False, True):
+        tag = f"dag-caller-{parallel}"
+        before = set(job_tags())
+        sc.addJobTag(tag)
+        try:
+            res = session.pipeline.run(parallel=parallel, max_concurrency=4)
+        finally:
+            sc.removeJobTag(tag)
+        assert res.success and res.succeeded == ["a", "b", "c", "d"]
+        new = {j: tags for j, tags in job_tags().items() if j not in before}
+        assert new
+        assert all(tag in tags for tags in new.values()), (parallel, new)
+
+
 def test_case_insensitive_dependency_matching(session):
     """Dependency matching is case-insensitive (pipeline.rs:1541-1554)."""
     session.pipeline.register(

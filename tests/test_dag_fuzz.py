@@ -99,13 +99,15 @@ def _closure(deps, targets):
     return out
 
 
-def _check(result, deps, fail_set, subset=None):
+def _check(result, pipe, deps, fail_set, subset=None):
+    """Statuses match the model, each list in the pipeline's level order."""
     want = _model(deps, fail_set, subset)
-    assert set(result.succeeded) == {n for n, s in want.items() if s == "succeeded"}
-    assert {f["table"] for f in result.failed} == {
-        n for n, s in want.items() if s == "failed"
-    }
-    assert set(result.skipped) == {n for n, s in want.items() if s == "skipped"}
+    order = [n for level in pipe.topological_sort_levels(subset) for n in level]
+    assert result.succeeded == [n for n in order if want[n] == "succeeded"]
+    assert [f["table"] for f in result.failed] == [
+        n for n in order if want[n] == "failed"
+    ]
+    assert result.skipped == [n for n in order if want[n] == "skipped"]
     assert result.success == (
         not any(s in ("failed", "skipped") for s in want.values())
     )
@@ -122,7 +124,7 @@ def test_run_matches_model(session):
         pipe = Pipeline(session)
         pipe.register(defs)
         res = pipe.run(parallel=parallel, max_concurrency=4)
-        _check(res, deps, fail_set)
+        _check(res, pipe, deps, fail_set)
 
 
 def test_target_closure_matches_model(session):
@@ -139,7 +141,7 @@ def test_target_closure_matches_model(session):
             set(res.succeeded) | {f["table"] for f in res.failed} | set(res.skipped)
         )
         assert touched == subset
-        _check(res, deps, fail_set, subset)
+        _check(res, pipe, deps, fail_set, subset)
 
 
 def test_retry_idempotent_while_failing(session):

@@ -184,6 +184,40 @@ def test_merge_with_aliases(session):
     assert rows(session.query("SELECT v FROM tgt")) == [(15,)]
 
 
+@pytest.mark.parametrize(
+    "merge, want",
+    [
+        (
+            "MERGE INTO t USING src ON t.id = src.id "
+            "WHEN MATCHED THEN UPDATE SET v = CASE WHEN src.v > 0 THEN src.v ELSE 0 END",
+            [(1, 0), (2, 5)],
+        ),
+        (
+            "MERGE INTO t USING src ON t.id = src.id "
+            "WHEN NOT MATCHED THEN INSERT (id, v) "
+            "VALUES (src.id, CASE WHEN src.v > 0 THEN src.v ELSE 0 END)",
+            [(1, 10), (2, 20), (3, 0), (4, 8)],
+        ),
+        (
+            "MERGE INTO t USING src "
+            "ON t.id = src.id AND (CASE WHEN src.v > 0 THEN TRUE ELSE FALSE END) "
+            "WHEN MATCHED THEN UPDATE SET v = src.v "
+            "WHEN NOT MATCHED THEN INSERT (id, v) VALUES (src.id, src.v)",
+            [(1, -1), (1, 10), (2, 5), (3, -7), (4, 8)],
+        ),
+    ],
+    ids=["update_set", "insert_values", "on_condition"],
+)
+def test_merge_with_case_when(session, merge, want):
+    """CASE WHEN inside a MERGE is not a WHEN [NOT] MATCHED clause."""
+    session.query("CREATE TABLE t (id INT64, v INT64)")
+    session.query("INSERT INTO t VALUES (1, 10), (2, 20)")
+    session.query("CREATE TABLE src (id INT64, v INT64)")
+    session.query("INSERT INTO src VALUES (1, -1), (2, 5), (3, -7), (4, 8)")
+    session.query(merge)
+    assert rows(session.query("SELECT id, v FROM t ORDER BY id, v")) == want
+
+
 def test_merge_unknown_update_column_errors(session):
     session.query("CREATE TABLE tgt (k INT64)")
     session.query("CREATE TABLE src2 (k INT64)")

@@ -322,6 +322,34 @@ def test_insert_compaction_keeps_rows(session):
     assert session.tables["cmp"].insert_files < 5
 
 
+def test_rewrite_and_reload_delete_insert_dir(session, tmp_path):
+    """Once inserts live in an insert directory, an UPDATE (snapshot
+    rewrite) or a loader replacing the table leaves no orphan of it."""
+    cols = [{"name": "id", "type": "INT64"}, {"name": "v", "type": "INT64"}]
+    session.create_table("t", cols)
+
+    def insert_past_union_max(base: int) -> None:
+        for i in range(base, base + Session._INSERT_UNION_MAX + 2):
+            session.insert("t", [[i, i * 10]])
+        assert session.tables["t"].insert_dir is not None
+
+    def insert_dirs() -> list[str]:
+        return [d for d in os.listdir(session._warehouse) if "__ins" in d]
+
+    insert_past_union_max(0)
+    session.query("UPDATE t SET v = v + 1 WHERE id < 5")
+    assert insert_dirs() == []
+    assert rows(session.query("SELECT id, v FROM t ORDER BY id")) == [
+        (i, i * 10 + (i < 5)) for i in range(10)
+    ]
+    insert_past_union_max(10)
+    path = str(tmp_path / "t.parquet")
+    session.spark.createDataFrame([(7, 70)], "id long, v long").write.parquet(path)
+    assert session.load_parquet("t", path, cols) == 1
+    assert insert_dirs() == []
+    assert rows(session.query("SELECT id, v FROM t")) == [(7, 70)]
+
+
 def test_bq_response_wire_type_names(session):
     """Wire schema uses the reference's type vocabulary
     (yachtsql.rs:256-276): BOOLEAN not BOOL, NUMERIC for any decimal,
