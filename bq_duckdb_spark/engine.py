@@ -28,6 +28,8 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+from pyspark.sql.conversion import LocalDataToArrowConversion
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from bq_duckdb_spark import types as bqtypes
 from bq_duckdb_spark.dialect import _find_top_level_keyword
@@ -155,6 +157,24 @@ class Session:
 
     # -- DDL / DML ---------------------------------------------------------
 
+    def _local_frame(self, rows: list, schema: T.StructType) -> DataFrame:
+        """``rows`` (tuples of Python values) as a DataFrame over a JVM
+        ``LocalRelation``. A Python list handed to ``createDataFrame``
+        becomes a pickled RDD, and every later scan of it runs one
+        Python-worker task per partition; an Arrow table is shipped to
+        the JVM once and scans there (past
+        ``spark.sql.execution.arrow.localRelationThreshold`` as a
+        JVM-only Arrow RDD). Rows get the same type check
+        ``createDataFrame(verifySchema=True)`` runs on a list."""
+        verify = T._make_type_verifier(schema)
+        for row in rows:
+            verify(row)
+        if rows:
+            table = LocalDataToArrowConversion.convert(rows, schema, False)
+        else:
+            table = to_arrow_schema(schema).empty_table()
+        return self.spark.createDataFrame(table, schema)
+
     def register_dataframe(self, name: str, df: DataFrame) -> TableEntry:
         with self._lock:
             view = self._view_name(name)
@@ -197,8 +217,7 @@ class Session:
                     return
                 raise ValueError(f"Table already exists: {name}")
             schema = bqtypes.schema_from_columns(columns)
-            df = self.spark.createDataFrame([], schema)
-            self.register_dataframe(name, df)
+            self.register_dataframe(name, self._local_frame([], schema))
             entry = self.tables[name.lower()]
             entry.columns = list(columns)
             entry.partition_by = partition_by
@@ -230,8 +249,11 @@ class Session:
         """Multi-row insert from JSON arrays/objects; returns inserted count
         (``bq.insert``, reference src/rpc/methods.rs:114-148).
 
-        Plan-depth discipline: the first ``_INSERT_UNION_MAX`` inserts
-        extend a lazy union (no I/O); beyond that the table is rebased
+        Each batch becomes an in-memory ``LocalRelation``
+        (:meth:`_local_frame`). Plan-depth discipline: the first
+        ``_INSERT_UNION_MAX`` inserts extend a lazy union of those
+        relations (no I/O, and no Python worker when the table is
+        scanned); beyond that the table is rebased
         onto a session-warehouse parquet dir and each insert appends one
         small file — analysis stays O(1) no matter how many batches a
         long-lived RPC session accumulates (the reference's append
@@ -245,8 +267,7 @@ class Session:
             entry = self.tables[key]
             schema = bqtypes.schema_from_columns(entry.columns)
             prepared = [self._coerce_row(r, entry.columns, schema) for r in rows]
-            new_df = self.spark.createDataFrame(prepared, schema)
-            self._append_df(entry, new_df, schema)
+            self._append_df(entry, self._local_frame(prepared, schema), schema)
             return len(prepared)
 
     def _append_df(self, entry: TableEntry, new_df: DataFrame, schema: T.StructType) -> None:
@@ -321,12 +342,16 @@ class Session:
                     f"{len(schema.fields)} columns"
                 )
         # wire values are JSON (dates/decimals/intervals as strings,
-        # BYTES base64, STRUCT objects) — coerce each to what
-        # createDataFrame accepts for the declared type
-        return tuple(
-            bqtypes.json_to_spark_value(v, f.dataType)
-            for v, f in zip(vals, schema.fields)
-        )
+        # BYTES base64, STRUCT objects) — coerce each to what the row
+        # verifier accepts for the declared type, naming the column of
+        # a value that cannot be coerced
+        out = []
+        for v, f in zip(vals, schema.fields):
+            try:
+                out.append(bqtypes.json_to_spark_value(v, f.dataType))
+            except ValueError as e:
+                raise ValueError(f"field {f.name}: {e}") from e
+        return tuple(out)
 
     # -- query -------------------------------------------------------------
 
@@ -541,7 +566,7 @@ class Session:
         self.materialize(tgt_name, result)
 
     def _empty_result(self) -> DataFrame:
-        return self.spark.createDataFrame([], T.StructType([]))
+        return self._local_frame([], T.StructType([]))
 
     _CREATE_RE = re.compile(
         r"^\s*CREATE\s+(OR\s+REPLACE\s+)?TABLE\s+(IF\s+NOT\s+EXISTS\s+)?"
@@ -998,13 +1023,15 @@ class Session:
                     (entry.name, "public", f.name, bqtypes.spark_to_bq(f.dataType), pos)
                 )
         tv, cv = f"{self._tag}__infoschema_tables", f"{self._tag}__infoschema_columns"
-        self.spark.createDataFrame(
-            tables_rows, "table_name string, table_schema string"
+        self._local_frame(
+            tables_rows, T.StructType.fromDDL("table_name string, table_schema string")
         ).createOrReplaceTempView(tv)
-        self.spark.createDataFrame(
+        self._local_frame(
             cols_rows,
-            "table_name string, table_schema string, column_name string, "
-            "data_type string, ordinal_position int",
+            T.StructType.fromDDL(
+                "table_name string, table_schema string, column_name string, "
+                "data_type string, ordinal_position int"
+            ),
         ).createOrReplaceTempView(cv)
         return {"information_schema.tables": tv, "information_schema.columns": cv}
 

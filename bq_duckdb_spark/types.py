@@ -9,6 +9,10 @@ reports BigQuery type names back to clients.
 
 from __future__ import annotations
 
+import base64
+import binascii
+import datetime
+import decimal
 import re
 
 from pyspark.sql import types as T
@@ -167,43 +171,56 @@ _INTERVAL_RE = re.compile(
 
 
 def json_to_spark_value(v, dt: T.DataType):
-    """Coerce one JSON-decoded wire value to the Python value Spark's
-    ``createDataFrame`` accepts for ``dt``.
+    """Coerce one JSON-decoded wire value to the Python value Spark's row
+    verifier accepts for ``dt`` and the Arrow conversion of an inserted
+    batch stores as is.
 
     ``bq.insert`` rows arrive as JSON (reference src/rpc/methods.rs:
     114-148 — the BigQuery ``insertAll`` convention: dates/timestamps/
     decimals/intervals as strings, BYTES as base64, STRUCT as an
-    object). Spark's createDataFrame rejects e.g. a string for a
-    DateType field, so each declared-type leaf converts here; values
-    already in the target Python type pass through untouched.
+    object). The verifier rejects e.g. a string for a DateType field,
+    so each declared-type leaf converts here; values already in the
+    target Python type pass through, except that:
+
+    - NUMERIC/BIGNUMERIC round half-up to the column's scale, as the
+      JVM rounds a decimal it stores;
+    - a zone-less TIMESTAMP is UTC (BigQuery's reading, whatever the
+      host's zone), and DATETIME drops any zone it is given.
+
+    A NUMERIC that does not fit its column, an INT64 beyond 64 bits
+    and BYTES that are not base64 raise ``ValueError`` here, before the
+    batch joins the table.
     """
     if v is None:
         return None
     if isinstance(dt, T.DateType):
-        if isinstance(v, str):
-            import datetime
-
-            return datetime.date.fromisoformat(v)
-        return v
+        return datetime.date.fromisoformat(v) if isinstance(v, str) else v
     if isinstance(dt, (T.TimestampType, T.TimestampNTZType)):
         if isinstance(v, str):
-            import datetime
-
             s = v.replace("T", " ", 1)
             if s.endswith("Z"):
                 s = s[:-1] + "+00:00"
-            return datetime.datetime.fromisoformat(s)
+            v = datetime.datetime.fromisoformat(s)
+        if isinstance(v, datetime.datetime):
+            if isinstance(dt, T.TimestampNTZType):
+                return v.replace(tzinfo=None)
+            if v.tzinfo is None:
+                return v.replace(tzinfo=datetime.timezone.utc)
         return v
     if isinstance(dt, T.DecimalType):
-        import decimal
-
-        if isinstance(v, decimal.Decimal):
-            return v
-        # through str() so a float literal doesn't import binary noise
-        return decimal.Decimal(str(v))
+        # the column's precision, not the default context's 28 digits, so
+        # a DECIMAL(38, 9) keeps all 38 and a value beyond them is refused
+        ctx = decimal.Context(prec=dt.precision, rounding=decimal.ROUND_HALF_UP)
+        try:
+            # through str() so a float literal doesn't import binary noise
+            d = v if isinstance(v, decimal.Decimal) else decimal.Decimal(str(v))
+            return d.quantize(decimal.Decimal(f"1E-{dt.scale}"), context=ctx)
+        except decimal.InvalidOperation:
+            raise ValueError(
+                f"{v!r} cannot be stored as {spark_to_bq(dt)} "
+                f"(DECIMAL({dt.precision}, {dt.scale}))"
+            ) from None
     if isinstance(dt, T.DayTimeIntervalType):
-        import datetime
-
         if isinstance(v, datetime.timedelta):
             return v
         if isinstance(v, (int, float)) and not isinstance(v, bool):
@@ -227,9 +244,10 @@ def json_to_spark_value(v, dt: T.DataType):
         return v
     if isinstance(dt, T.BinaryType):
         if isinstance(v, str):
-            import base64
-
-            return base64.b64decode(v)
+            try:
+                return base64.b64decode(v, validate=True)
+            except binascii.Error as e:
+                raise ValueError(f"{v!r} is not valid base64 for BYTES: {e}") from None
         return bytes(v)
     if isinstance(dt, T.ArrayType) and isinstance(v, (list, tuple)):
         return [json_to_spark_value(x, dt.elementType) for x in v]
@@ -243,6 +261,10 @@ def json_to_spark_value(v, dt: T.DataType):
                 json_to_spark_value(x, f.dataType) for x, f in zip(v, dt.fields)
             )
         return v
-    if isinstance(dt, T.DoubleType) and isinstance(v, int) and not isinstance(v, bool):
+    if isinstance(v, bool) or not isinstance(v, int):
+        return v
+    if isinstance(dt, T.LongType) and not -(2**63) <= v < 2**63:
+        raise ValueError(f"{v} is out of range for INT64")
+    if isinstance(dt, T.DoubleType):
         return float(v)
     return v

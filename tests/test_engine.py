@@ -396,3 +396,28 @@ def test_insert_rejects_surplus_positional_values(session):
         session.insert("narrow_t", [[1, "a", "surplus"]])
     # nothing was written
     assert rows(session.query("SELECT count(*) AS c FROM narrow_t")) == [(0,)]
+
+
+def test_inserted_and_created_tables_are_local_relations(session):
+    """bq.createTable, bq.insert batches, statement results and
+    information_schema are in-memory LocalRelations, not pickled Python
+    RDDs: scanning them runs no Python-worker task."""
+
+    def leaves(df):
+        seq = df._jdf.queryExecution().analyzed().collectLeaves()
+        return [seq.apply(i).getClass().getSimpleName() for i in range(seq.size())]
+
+    session.create_table(
+        "lr_t", [{"name": "id", "type": "INT64"}, {"name": "s", "type": "STRING"}]
+    )
+    for i in range(3):
+        session.insert("lr_t", [[i, "a"], [i + 10, None]])
+    created = session.query("CREATE TABLE lr_tmp (x INT64)")
+    dropped = session.query("DROP TABLE lr_tmp")
+    assert leaves(session.table("lr_t")) == ["LocalRelation"] * 4
+    for df in (created, dropped, session._empty_result()):
+        assert df._jdf.queryExecution().analyzed().getClass().getSimpleName() == "LocalRelation"
+    info = session.query("SELECT table_name FROM information_schema.tables")
+    assert "LogicalRDD" not in leaves(info)
+    assert rows(info) == [("lr_t",)]
+    assert rows(session.query("SELECT count(*), sum(id) FROM lr_t")) == [(6, 36)]

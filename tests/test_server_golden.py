@@ -287,3 +287,38 @@ def test_timestamp_on_non_utc_host():
         ]
     finally:
         c.close()
+
+
+def test_zoneless_timestamp_insert_on_non_utc_host():
+    """bq.insert reads zone-less TIMESTAMP text as UTC, as BigQuery does
+    and as a TIMESTAMP literal in INSERT … VALUES is read — not in the
+    host's zone."""
+    c = StdioClient(TZ="America/New_York")
+    try:
+        sid = json.loads(c.call_raw("bq.createSession"))["result"]["sessionId"]
+        c.call_raw(
+            "bq.createTable",
+            {
+                "sessionId": sid,
+                "tableName": "tz_t",
+                "schema": [{"name": "ts", "type": "TIMESTAMP"}],
+            },
+        )
+        ins = c.call_raw(
+            "bq.insert",
+            {"sessionId": sid, "tableName": "tz_t", "rows": [["2024-01-01 10:00:00"]]},
+        )
+        assert json.loads(ins)["result"] == {"insertedRows": 1}
+        c.call_raw(
+            "bq.query",
+            {
+                "sessionId": sid,
+                "sql": "INSERT INTO tz_t VALUES (TIMESTAMP '2024-01-01 10:00:00')",
+            },
+        )
+        line = c.call_raw("bq.query", {"sessionId": sid, "sql": "SELECT ts FROM tz_t"})
+        assert json.loads(line)["result"]["rows"] == [
+            {"f": [{"v": "2024-01-01 10:00:00"}]}
+        ] * 2
+    finally:
+        c.close()

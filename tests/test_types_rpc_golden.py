@@ -176,3 +176,154 @@ def test_malformed_interval_is_loud(server, sid):
     )
     assert r["error"]["code"] == -32000
     assert "Malformed INTERVAL" in r["error"]["message"]
+
+
+# every insertable type in one row, then an all-NULL row
+_ALL_TYPES_SCHEMA = [
+    ("i", "INT64"), ("f", "FLOAT64"), ("b", "BOOL"), ("s", "STRING"),
+    ("by", "BYTES"), ("n", "NUMERIC"), ("bn", "BIGNUMERIC"), ("d", "DATE"),
+    ("dt", "DATETIME"), ("t", "TIME"), ("iv", "INTERVAL"), ("ts", "TIMESTAMP"),
+    ("ts2", "TIMESTAMP"), ("j", "JSON"), ("g", "GEOGRAPHY"), ("a", "ARRAY<INT64>"),
+    ("st", "STRUCT<x INT64, y STRING>"), ("r", "RANGE<DATE>"),
+]
+_ALL_TYPES_ROW = [
+    42, 1.5, True, 'h\u00e9llo "q"', "aGVsbG8=",
+    "1.0000000005",  # 10 decimals: rounds half-up to 1.000000001
+    "12345.678901234567891234", "2024-02-29", "2024-06-01T12:34:56.789",
+    "12:34:56", "1 02:03:04.5", "2024-06-01T12:00:00Z", "2024-06-01 12:00:00+05:30",
+    '{"k": [1, 2]}', "POINT(1 2)", [1, None, 3], {"x": 7, "y": "z"},
+    {"start": "2024-01-01", "end": "2024-12-31"},
+]
+_ALL_TYPES_GOLDEN = (
+    '{"jsonrpc": "2.0", "id": 7'
+    ', "result": {"kind": "bigquery#queryResponse"'
+    ', "schema": {"fields": [{"name": "i", "type": "INT64"}'
+    ', {"name": "f", "type": "FLOAT64"}, {"name": "b"'
+    ', "type": "BOOLEAN"}, {"name": "s", "type": "STRING"}'
+    ', {"name": "by", "type": "BYTES"}, {"name": "n"'
+    ', "type": "NUMERIC"}, {"name": "bn", "type": "NUMERIC"}'
+    ', {"name": "d", "type": "DATE"}, {"name": "dt"'
+    ', "type": "DATETIME"}, {"name": "t", "type": "STRING"}'
+    ', {"name": "iv", "type": "INTERVAL"}, {"name": "ts"'
+    ', "type": "TIMESTAMP"}, {"name": "ts2", "type": "TIMESTAMP"}'
+    ', {"name": "j", "type": "STRING"}, {"name": "g"'
+    ', "type": "STRING"}, {"name": "a", "type": "ARRAY<INT64>"}'
+    ', {"name": "st", "type": "STRUCT"}, {"name": "r"'
+    ', "type": "STRUCT"}]}, "rows": [{"f": [{"v": 42}, {"v": 1.5}'
+    ', {"v": true}, {"v": "h\\u00e9llo \\"q\\""}, {"v": "aGVsbG8="}'
+    ', {"v": "1.000000001"}, {"v": "12345.678901234567891234"}'
+    ', {"v": "2024-02-29"}, {"v": "2024-06-01 12:34:56.789000"}'
+    ', {"v": "12:34:56"}, {"v": "1 2:03:04.500000"}'
+    ', {"v": "2024-06-01 12:00:00"}, {"v": "2024-06-01 06:30:00"}'
+    ', {"v": "{\\"k\\": [1, 2]}"}, {"v": "POINT(1 2)"}, {"v": [1, null'
+    ', 3]}, {"v": {"x": 7, "y": "z"}}, {"v": {"start": "2024-01-01"'
+    ', "end": "2024-12-31"}}]}, {"f": [{"v": null}, {"v": null}'
+    ', {"v": null}, {"v": null}, {"v": null}, {"v": null}'
+    ', {"v": null}, {"v": null}, {"v": null}, {"v": null}'
+    ', {"v": null}, {"v": null}, {"v": null}, {"v": null}'
+    ', {"v": null}, {"v": null}, {"v": null}, {"v": null}]}]'
+    ', "totalRows": "2", "jobComplete": true}}'
+)
+
+
+def test_all_insertable_types_wire_golden(server, sid):
+    """bq.insert of every insertable type (plus an all-NULL row), then
+    the exact bq.query response text: the batch's conversion to an
+    in-memory Arrow relation must not change a byte on the wire."""
+    r = _call(
+        server,
+        "bq.createTable",
+        {
+            "sessionId": sid,
+            "tableName": "g_all",
+            "schema": [{"name": n, "type": t} for n, t in _ALL_TYPES_SCHEMA],
+        },
+    )
+    assert r["result"] == {"success": True}, r
+    r = _call(
+        server,
+        "bq.insert",
+        {
+            "sessionId": sid,
+            "tableName": "g_all",
+            "rows": [_ALL_TYPES_ROW, [None] * len(_ALL_TYPES_ROW)],
+        },
+    )
+    assert r["result"] == {"insertedRows": 2}, r
+    text = server.handle_text(
+        json.dumps(
+            {
+                "jsonrpc": "2.0",
+                "id": 7,
+                "method": "bq.query",
+                "params": {
+                    "sessionId": sid,
+                    "sql": "SELECT * FROM g_all ORDER BY i NULLS LAST",
+                },
+            }
+        )
+    )
+    assert text == _ALL_TYPES_GOLDEN
+
+
+@pytest.mark.parametrize(
+    "bq_type,value",
+    [
+        ("INT64", "abc"),
+        ("INT64", True),
+        ("INT64", 1.5),
+        ("INT64", 1.0),
+        ("INT64", 2**63),
+        ("FLOAT64", "1.5"),
+        ("FLOAT64", True),
+        ("BOOL", 1),
+        ("ARRAY<INT64>", 5),
+        ("ARRAY<INT64>", ["a"]),
+        ("STRUCT<x INT64>", {"x": "a"}),
+        ("STRUCT<x INT64, y STRING>", [1]),
+        ("NUMERIC", "1e30"),
+        ("BYTES", "!!"),
+    ],
+    ids=lambda p: json.dumps(p),
+)
+def test_insert_rejects_wrong_value(server, sid, bq_type, value):
+    """A value the column cannot hold fails the insert as an Executor
+    error naming the column, and the table stays readable and empty.
+    (A NUMERIC overflow used to be stored and then fail every read.)"""
+    _call(
+        server,
+        "bq.createTable",
+        {
+            "sessionId": sid,
+            "tableName": "g_rej",
+            "schema": [{"name": "bad_col", "type": bq_type}],
+        },
+    )
+    r = _call(server, "bq.insert", {"sessionId": sid, "tableName": "g_rej", "rows": [[value]]})
+    assert r["error"]["code"] == -32000, r
+    assert "bad_col" in r["error"]["message"], r
+    q = _call(server, "bq.query", {"sessionId": sid, "sql": "SELECT * FROM g_rej"})
+    assert "error" not in q, q
+    assert q["result"]["totalRows"] == "0"
+
+
+def test_int_into_string_reads_back_as_text(server, sid):
+    got = _roundtrip(server, sid, "g_s5", "STRING", 5)
+    assert got == _golden("v", "STRING", "5")
+
+
+def test_numeric_uses_all_38_digits(server, sid):
+    """The largest NUMERIC fits (38 digits, past the default decimal
+    context's 28); half-up rounding applies at the 9th decimal."""
+    top = "9" * 29 + "." + "9" * 9
+    got = _roundtrip(server, sid, "g_ntop", "NUMERIC", top)
+    assert got == _golden("v", "NUMERIC", top)
+    got = _roundtrip(server, sid, "g_nhalf", "NUMERIC", "-2.0000000005")
+    assert got == _golden("v", "NUMERIC", "-2.000000001")
+
+
+def test_datetime_insert_drops_a_given_zone(server, sid):
+    """DATETIME is zone-less: an offset on the inserted text is dropped
+    and the wall-clock time kept."""
+    got = _roundtrip(server, sid, "g_dtz", "DATETIME", "2024-06-01T12:00:00+05:30")
+    assert got == _golden("v", "DATETIME", "2024-06-01 12:00:00")
