@@ -106,13 +106,6 @@ def _dec_sum(col: F.Column, digits: int = 2) -> F.Column:
     return F.round(F.sum(col.cast("decimal(30,6)")), digits).cast("double")
 
 
-def _dec_sum_sql(expr: str, digits: int = 2) -> str:
-    """DuckDB mirror of :func:`_dec_sum`."""
-    return (
-        f"CAST(round(sum(CAST({expr} AS DECIMAL(30,6))), {digits}) AS DOUBLE)"
-    )
-
-
 # ---------------------------------------------------------------------------
 # q02 — min-within-group + join-back (original: min ps_supplycost in EUROPE)
 # ---------------------------------------------------------------------------

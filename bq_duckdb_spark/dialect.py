@@ -206,10 +206,13 @@ def _trunc(cast_to: str | None):
     return rw
 
 
-_SQL_KEYWORDS = {
-    "WITH", "WHERE", "GROUP", "ORDER", "LIMIT", "JOIN", "ON", "CROSS",
-    "LEFT", "RIGHT", "INNER", "FULL", "UNION", "HAVING", "QUALIFY",
-    "LATERAL", "AS",
+# words that can follow a FROM item without being its alias: the next
+# clause, join or set operator
+_CLAUSE_WORDS = {
+    "WHERE", "GROUP", "ORDER", "LIMIT", "HAVING", "QUALIFY", "WINDOW",
+    "UNION", "INTERSECT", "EXCEPT", "JOIN", "ON", "USING", "LEFT", "RIGHT",
+    "FULL", "INNER", "CROSS", "OUTER", "NATURAL", "SEMI", "ANTI", "LATERAL",
+    "PIVOT", "UNPIVOT", "TABLESAMPLE", "WITH", "SELECT", "WHEN", "SET", "AS",
 }
 
 
@@ -231,7 +234,7 @@ def _unnest_from(sql: str) -> str:
         rest = sql[close_idx + 1 :]
         am = re.match(r"\s*(?:AS\s+)?([A-Za-z_]\w*)", rest)
         # a bare keyword after UNNEST() is the next clause, not an alias
-        if am and am.group(1).upper() in _SQL_KEYWORDS and not re.match(
+        if am and am.group(1).upper() in _CLAUSE_WORDS and not re.match(
             r"\s*AS\s", rest, re.IGNORECASE
         ):
             am = None
@@ -710,29 +713,48 @@ def _rename_cast_types(sql: str) -> str:
     return pat.sub(sub, sql)
 
 
+def _map_tables(sql: str, table_mapping: dict[str, str]) -> str:
+    """Rewrite every registered table reference (bare or backticked,
+    case-insensitive, longest name first, never a dotted part of a
+    longer name) to ``<view> [TABLESAMPLE (…)] AS <alias>``: Spark's
+    order, alias last. The alias is the user's (``t c`` / ``t AS c``)
+    or else the name's last component, BigQuery's implicit alias, so
+    ``t.col`` and ``tbl.col`` still resolve against the view."""
+    lookup = {name.lower(): view for name, view in table_mapping.items()}
+    names = "|".join(re.escape(n) for n in sorted(table_mapping, key=len, reverse=True))
+    clause = "|".join(_CLAUSE_WORDS)
+    pat = re.compile(
+        rf"(?<![\w.`])(`?)({names})\1(?![\w.`])"
+        rf"(?:\s+(?:AS\s+)?(?!(?:{clause})\b)([A-Za-z_]\w*))?"
+        r"(?:\s+TABLESAMPLE\s*(?:SYSTEM\s*)?\(([^)]*)\))?",
+        re.IGNORECASE,
+    )
+
+    def sub(m: re.Match) -> str:
+        name, alias, sample = m.group(2), m.group(3), m.group(4)
+        ts = "" if sample is None else f" TABLESAMPLE ({sample})"
+        return f"{lookup[name.lower()]}{ts} AS {alias or name.split('.')[-1]}"
+
+    return _apply_outside_strings(sql, lambda seg: pat.sub(sub, seg))
+
+
 def transpile(sql: str, table_mapping: dict[str, str] | None = None) -> str:
     """BigQuery SQL → Spark SQL.
 
-    ``table_mapping`` maps qualified/registered names (e.g.
-    ``proj.ds.tbl``) to the engine's mangled view names; replacement is
-    case-insensitive, longest-name-first, word-boundary, and also covers
-    the backticked form ``\\`proj.ds.tbl\\```.
+    ``table_mapping`` maps each registered name (e.g. ``proj.ds.tbl``)
+    to the engine's bare view name. transpile is the only code that
+    spells a table reference: it writes the view, the alias and the
+    TABLESAMPLE clause in Spark's order (see :func:`_map_tables`), so
+    callers pass its output to Spark unchanged.
     """
     # BigQuery accepts #-to-end-of-line comments; Spark doesn't
     out = _apply_outside_strings(sql, lambda seg: re.sub(r"#[^\n]*", "", seg))
+    # type names before the mapping writes aliases: ``FROM t bool`` must
+    # keep its alias
+    out = _rename_cast_types(out)
     if table_mapping:
+        out = _map_tables(out, table_mapping)
 
-        def _map_code(segment: str) -> str:
-            for name in sorted(table_mapping, key=len, reverse=True):
-                target = table_mapping[name]
-                escaped = re.escape(name)
-                segment = re.sub(rf"`{escaped}`", target, segment, flags=re.IGNORECASE)
-                segment = re.sub(
-                    rf"(?<![\w.`]){escaped}(?![\w.`])", target, segment, flags=re.IGNORECASE
-                )
-            return segment
-
-        out = _apply_outside_strings(out, _map_code)
     def _rename_code(segment: str) -> str:
         # outside string literals only: common-word names (SPLIT, FORMAT,
         # ARRAY_CONCAT, ...) must never corrupt literal data like "SPLIT("
@@ -742,6 +764,7 @@ def transpile(sql: str, table_mapping: dict[str, str] | None = None) -> str:
                 rf"\b{re.escape(src)}\s*\(", f"{dst}(", segment, flags=re.IGNORECASE
             )
         # BigQuery TABLESAMPLE SYSTEM (n PERCENT) → Spark TABLESAMPLE (n PERCENT)
+        # on references no mapping spelled (CTEs, subqueries)
         return re.sub(
             r"\bTABLESAMPLE\s+SYSTEM\s*\(", "TABLESAMPLE (", segment, flags=re.IGNORECASE
         )
@@ -771,7 +794,6 @@ def transpile(sql: str, table_mapping: dict[str, str] | None = None) -> str:
     out = _rewrite_array_indexing(out)
     out = _bracket_literals(out)
     out = _brace_struct_literals(out)
-    out = _rename_cast_types(out)
     out = _rewrite_qualify(out)
     return out
 

@@ -137,22 +137,14 @@ class Session:
         return None
 
     def _table_mapping(self) -> dict[str, str]:
-        # map each registered name to its mangled view WITH the original
-        # (last-component) name as alias, so user SQL that qualifies
-        # columns — ``SELECT t.id FROM t`` / ``ds.tbl.col`` — still
-        # resolves after the rename. Bare-name occurrences outside FROM
-        # position are column refs, which the word-boundary regex in
-        # transpile() never matches (dotted refs are excluded).
-        def target(name: str, view: str) -> str:
-            return f"{view} AS {name.split('.')[-1]}"
-
-        mapping = {e.name: target(e.name, e.view) for e in self.tables.values()}
+        # each registered name, and under a default project its 2-level
+        # short form, → its bare view; transpile() writes the alias
+        mapping = {e.name: e.view for e in self.tables.values()}
         if self.default_project:
-            dp = self.default_project.lower()
+            dp = self.default_project.lower() + "."
             for key, e in self.tables.items():
-                if key.startswith(dp + "."):
-                    short = key[len(dp) + 1 :]
-                    mapping[short] = target(short, e.view)
+                if key.startswith(dp):
+                    mapping[key[len(dp) :]] = e.view
         return mapping
 
     # -- DDL / DML ---------------------------------------------------------
@@ -369,56 +361,11 @@ class Session:
         mapping = self._table_mapping()
         if "information_schema" in sql.lower():
             mapping.update(self._register_information_schema())
-        spark_sql = self._reorder_tablesample(
-            self._collapse_double_alias(transpile(sql, mapping))
-        )
+        spark_sql = transpile(sql, mapping)
         try:
             return self.spark.sql(spark_sql)
         except Exception as e:  # append failed SQL like yachtsql.rs:28
             raise RuntimeError(f"{e}\nSQL: {sql}") from e
-
-    # identifiers that can follow "FROM <view> AS <name>" without being a
-    # user alias — i.e. the next SQL clause
-    _NOT_AN_ALIAS = {
-        "WHERE", "GROUP", "ORDER", "LIMIT", "HAVING", "QUALIFY", "UNION",
-        "JOIN", "ON", "LEFT", "RIGHT", "FULL", "INNER", "CROSS", "OUTER",
-        "LATERAL", "WITH", "SELECT", "WHEN", "SET", "USING", "NATURAL",
-        "SEMI", "ANTI", "INTERSECT", "EXCEPT", "TABLESAMPLE", "PIVOT",
-        "UNPIVOT", "WINDOW", "AS",
-    }
-
-    def _reorder_tablesample(self, sql: str) -> str:
-        """Spark requires ``tbl TABLESAMPLE (…) [AS alias]`` — alias
-        last — while the mapping emits ``<view> AS t TABLESAMPLE (…)``.
-        Swap them, anchored on the mangled view name."""
-        for e in list(self.tables.values()):
-            sql = re.sub(
-                rf"{re.escape(e.view)}\s+AS\s+(\w+)\s+(TABLESAMPLE\s*\([^)]*\))",
-                rf"{e.view} \2 AS \1",
-                sql,
-                flags=re.IGNORECASE,
-            )
-        return sql
-
-    def _collapse_double_alias(self, sql: str) -> str:
-        """The table mapping rewrites ``t`` → ``<view> AS t`` so qualified
-        column refs keep resolving; when the user ALSO wrote an alias
-        (``FROM t c``) that produces ``<view> AS t c`` — collapse to the
-        user's alias. Anchored on the mangled view name, so nothing else
-        in the SQL can match."""
-        for e in list(self.tables.values()):
-            pat = re.compile(
-                rf"{re.escape(e.view)}\s+AS\s+(\w+)\s+(?:AS\s+)?([A-Za-z_]\w*)",
-                re.IGNORECASE,
-            )
-
-            def sub(m):
-                if m.group(2).upper() in self._NOT_AN_ALIAS:
-                    return m.group(0)
-                return f"{e.view} AS {m.group(2)}"
-
-            sql = pat.sub(sub, sql)
-        return sql
 
     def _execute_merge(self, m: "re.Match") -> None:
         """MERGE INTO target USING source ON cond
@@ -1102,15 +1049,10 @@ class Session:
         On a real cluster the same ``spark.read.parquet`` call serves
         ``gs://`` once the connector is on the classpath.
         """
+        from bq_duckdb_spark.sources import readers
+
         _check_cloud_path(path)
-        df = self.spark.read.parquet(path)
-        if columns:
-            schema = bqtypes.schema_from_columns(columns)
-            projected = [
-                df[f.name].cast(f.dataType).alias(f.name) for f in schema.fields
-            ]
-            df = df.select(projected)
-        return self._load_via(name, df, columns)
+        return self._load_via(name, readers.read_parquet(self.spark, path, columns), columns)
 
     def _load_via(self, name: str, df: DataFrame, columns: list[dict] | None) -> int:
         entry = self._register_replacing(name, df)

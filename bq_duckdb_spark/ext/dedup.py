@@ -152,21 +152,6 @@ def _tokens_expr(text_col: str) -> str:
     return f"split(trim({text_col}), '\\\\s+')"
 
 
-def _shingles_expr(text_col: str, k: int) -> str:
-    """Token k-gram shingles as an array<string> (distinct). Kept for
-    callers that need the human-readable shingle text; the dedup hot
-    paths use :func:`_with_shingle_hashes` instead — building shingle
-    STRINGS (slice + concat_ws per k-gram, inside an interpreted
-    higher-order lambda) measured 12x slower than hash-combining the
-    token hashes at sf0.1."""
-    toks = _tokens_expr(text_col)
-    return (
-        f"array_distinct(CASE WHEN size({toks}) < {k} THEN array(concat_ws(' ', {toks})) "
-        f"ELSE transform(sequence(0, size({toks}) - {k}), "
-        f"i -> concat_ws(' ', slice({toks}, i + 1, {k}))) END)"
-    )
-
-
 def _with_shingle_hashes(
     df: DataFrame, text_col: str, k: int, out: str = "__sh_hashes"
 ) -> DataFrame:
@@ -1007,8 +992,11 @@ def connected_components(
     (plan becomes a LogicalRDD immediately; the RDD materializes inside
     the round's single probe job), so one round costs ONE job instead
     of the former eager-checkpoint + probe pair, and self-joins do not
-    duplicate lineage (the round-10 double-jump dead end). On a
-    cluster, set a reliable checkpoint dir and swap for checkpoint().
+    duplicate lineage (the round-10 double-jump dead end). A superseded
+    round's checkpointed blocks stay cached until Spark's context
+    cleaner reclaims them once unreferenced (``Dataset.unpersist`` does
+    not release a localCheckpoint's blocks). On a cluster, set a
+    reliable checkpoint dir and swap for checkpoint().
 
     Reference parity: the reference engine stops at pair output
     (no cluster resolver); this is part of the beyond-reference
@@ -1067,9 +1055,7 @@ def connected_components(
             .localCheckpoint(eager=False)
         )
         new_sum = new_labels.agg(F.sum("lbl")).first()[0]
-        old = labels
         labels = new_labels
-        old.unpersist()
         if new_sum == prev_sum:
             converged = True
             break

@@ -27,10 +27,6 @@ def _qcol(name: str) -> F.Column:
     return F.col("`" + name.replace("`", "``") + "`")
 
 
-def _result(rule: str, n: F.Column) -> F.Column:
-    return F.struct(F.lit(rule).alias("rule"), n.cast("long").alias("n_violations"))
-
-
 def check_not_null(df: DataFrame, cols: list[str]) -> DataFrame:
     """One row per column: count of NULLs.
 

@@ -144,15 +144,6 @@ def _xor_sql(a: str, b: str) -> str:
     )
 
 
-def _word_step(acc: str, w: str) -> str:
-    """One 8-byte word merged into the hash (both column refs)."""
-    k1 = _mm(_rotl_sql(_mm(w, str(P2)), 31), str(P1))
-    return (
-        f"({_mm(_rotl_sql(_xor_sql(acc, k1), 27), str(P1))} + {P4})"
-        f" % {_W}::HUGEINT"
-    )
-
-
 def _fmix_a(h: str) -> str:  # stage 1 of the avalanche
     return _mm(_xor_sql(h, f"({h} // 8589934592)"), str(P2))
 

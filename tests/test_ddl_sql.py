@@ -139,6 +139,36 @@ def test_update_without_where_hits_all(session):
     assert rows(session.query("SELECT v FROM t ORDER BY v")) == [(101,), (102,)]
 
 
+@pytest.mark.parametrize(
+    "stmt, want",
+    [
+        (
+            "DELETE FROM t WHERE id IN (SELECT o.id FROM other o WHERE o.v > 200)",
+            [(1, 10)],
+        ),
+        (
+            "UPDATE t SET v = (SELECT MAX(o.v) FROM other o) WHERE id = 1",
+            [(1, 300), (2, 20), (3, 30)],
+        ),
+        (
+            "MERGE INTO t USING other ON t.id = other.id "
+            "WHEN MATCHED THEN UPDATE SET v = (SELECT MIN(x.v) FROM other x)",
+            [(1, 100), (2, 100), (3, 100)],
+        ),
+    ],
+    ids=["delete_where", "update_set", "merge_set"],
+)
+def test_dml_subquery_table_alias(session, stmt, want):
+    """An aliased table inside a DML expression's subquery is spelled
+    ``<view> AS <alias>``, as in a plain query."""
+    session.query("CREATE TABLE t (id INT64, v INT64)")
+    session.query("INSERT INTO t VALUES (1, 10), (2, 20), (3, 30)")
+    session.query("CREATE TABLE other (id INT64, v INT64)")
+    session.query("INSERT INTO other VALUES (1, 100), (2, 300), (3, 250)")
+    session.query(stmt)
+    assert rows(session.query("SELECT id, v FROM t ORDER BY id")) == want
+
+
 def test_merge_update_and_insert(session):
     """MERGE: upsert — matched rows update, unmatched source rows insert."""
     session.query("CREATE TABLE tgt (k INT64, v STRING)")

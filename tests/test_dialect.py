@@ -6,12 +6,15 @@ keyword, nested parens, multiple CTEs, prefix non-match, subquery alias,
 case-insensitivity.
 """
 
+import pytest
+
 from bq_duckdb_spark.dialect import (
     extract_cte_names,
     extract_dependencies,
     is_table_referenced,
     transpile,
 )
+from bq_duckdb_spark.engine import Session, TableEntry
 
 
 class TestTranspile:
@@ -58,7 +61,7 @@ class TestTranspile:
         out = transpile(
             "SELECT * FROM users, users2", {"users": "v_users", "users2": "v_users2"}
         )
-        assert "FROM v_users, v_users2" in out
+        assert "FROM v_users AS users, v_users2 AS users2" in out
 
     def test_table_mapping_backticks_and_case(self):
         out = transpile("SELECT * FROM `Proj.DS.T`", {"proj.ds.t": "v"})
@@ -73,6 +76,79 @@ class TestTranspile:
         # the call inside the string still transpiles harmlessly or not at
         # all — what matters is the statement stays parseable; check quotes
         assert out.count("'") == 2
+
+
+class _SqlRecorder:
+    """Stands in for the SparkSession: ``sql`` returns the text it got."""
+
+    def sql(self, text):
+        return text
+
+
+def _spelling_session(default_project=None) -> Session:
+    s = Session.__new__(Session)
+    s.spark, s.default_project = _SqlRecorder(), default_project
+    s.tables = {n: TableEntry(n, "v_" + n.replace(".", "_")) for n in ("t", "u", "p.d.t")}
+    return s
+
+
+# BigQuery text → the Spark text Session.query hands to spark.sql
+@pytest.mark.parametrize(
+    "bq, spark",
+    [
+        ("SELECT * FROM t", "SELECT * FROM v_t AS t"),
+        ("SELECT c.id FROM t c", "SELECT c.id FROM v_t AS c"),
+        ("SELECT c.id FROM t AS c", "SELECT c.id FROM v_t AS c"),
+        ("SELECT id FROM t WHERE id > 1", "SELECT id FROM v_t AS t WHERE id > 1"),
+        (
+            "SELECT t.id FROM t JOIN u ON t.id = u.id",
+            "SELECT t.id FROM v_t AS t JOIN v_u AS u ON t.id = u.id",
+        ),
+        (
+            "SELECT * FROM t LEFT JOIN u USING (id)",
+            "SELECT * FROM v_t AS t LEFT JOIN v_u AS u USING (id)",
+        ),
+        ("SELECT * FROM t, u", "SELECT * FROM v_t AS t, v_u AS u"),
+        ("SELECT x.id FROM `p.d.t` x", "SELECT x.id FROM v_p_d_t AS x"),
+        ("SELECT t.id FROM p.d.t", "SELECT t.id FROM v_p_d_t AS t"),
+        (
+            "SELECT * FROM t TABLESAMPLE SYSTEM (10 PERCENT)",
+            "SELECT * FROM v_t TABLESAMPLE (10 PERCENT) AS t",
+        ),
+        (
+            "SELECT c.id FROM t c TABLESAMPLE SYSTEM (50 PERCENT)",
+            "SELECT c.id FROM v_t TABLESAMPLE (50 PERCENT) AS c",
+        ),
+        (
+            "SELECT c.id FROM t AS c TABLESAMPLE SYSTEM (50 PERCENT) WHERE c.id > 0",
+            "SELECT c.id FROM v_t TABLESAMPLE (50 PERCENT) AS c WHERE c.id > 0",
+        ),
+        (
+            "SELECT id FROM t UNION ALL SELECT id FROM u",
+            "SELECT id FROM v_t AS t UNION ALL SELECT id FROM v_u AS u",
+        ),
+        (
+            "SELECT id, ROW_NUMBER() OVER (ORDER BY id) AS rn FROM t QUALIFY rn = 1",
+            "SELECT * FROM ( SELECT id, ROW_NUMBER() OVER (ORDER BY id) AS rn "
+            "FROM v_t AS t ) WHERE rn = 1",
+        ),
+        ("SELECT 't' AS s FROM t", "SELECT 't' AS s FROM v_t AS t"),
+        ("SELECT bool.id FROM t bool", "SELECT bool.id FROM v_t AS bool"),
+    ],
+)
+def test_table_reference_spelling(bq, spark):
+    assert _spelling_session().query(bq) == spark
+
+
+@pytest.mark.parametrize(
+    "bq, spark",
+    [
+        ("SELECT * FROM d.t", "SELECT * FROM v_p_d_t AS t"),
+        ("SELECT x.id FROM d.t x", "SELECT x.id FROM v_p_d_t AS x"),
+    ],
+)
+def test_table_reference_spelling_default_project(bq, spark):
+    assert _spelling_session(default_project="p").query(bq) == spark
 
 
 class TestCteNames:
