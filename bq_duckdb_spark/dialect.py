@@ -703,14 +703,16 @@ _TYPE_RENAMES = {
 }
 
 
+_CAST_TYPE_RE = re.compile(
+    r"(\bAS\s+)(" + "|".join(_TYPE_RENAMES) + r")\b(?!\s*\()", re.IGNORECASE
+)
+
+
 def _rename_cast_types(sql: str) -> str:
     def sub(m):
         return f"{m.group(1)}{_TYPE_RENAMES[m.group(2).upper()]}"
 
-    pat = re.compile(
-        r"(\bAS\s+)(" + "|".join(_TYPE_RENAMES) + r")\b(?!\s*\()", re.IGNORECASE
-    )
-    return pat.sub(sub, sql)
+    return _apply_outside_strings(sql, lambda seg: _CAST_TYPE_RE.sub(sub, seg))
 
 
 def _map_tables(sql: str, table_mapping: dict[str, str]) -> str:

@@ -35,6 +35,7 @@ from bq_duckdb_spark import types as bqtypes
 from bq_duckdb_spark.dialect import _find_top_level_keyword
 from bq_duckdb_spark.dialect import _split_top_level_args as _split_top_level_commas
 from bq_duckdb_spark.dialect import transpile
+from bq_duckdb_spark.sources import readers
 
 
 @dataclass
@@ -56,8 +57,10 @@ def _sanitize(name: str) -> str:
 def _check_cloud_path(path: str) -> None:
     """Cloud URIs need connector jars + credentials absent here (S6);
     surface the boundary as a clean loader error, not a JVM trace. On a
-    real cluster the identical read/write call serves these schemes
-    once the connector is on the classpath."""
+    real cluster Spark's readers and writers serve these schemes once
+    the connector is on the classpath; parquet loads would also need
+    ``readers.open_parquet`` to list and read footers through it (it
+    reads local files)."""
     if path.startswith(("gs://", "s3://", "s3a://", "abfs://", "abfss://")):
         raise FileNotFoundError(
             f"Cloud storage path {path!r} requires the matching "
@@ -920,7 +923,7 @@ class Session:
             if os.path.exists(path):
                 shutil.rmtree(path, ignore_errors=True)
             os.replace(tmp, path)
-            snap = self.spark.read.parquet(path)
+            snap, rows = readers.open_parquet(self.spark, path)
             if part_col:
                 # partitionBy moves the partition column last and
                 # re-infers its type from directory names; restore the
@@ -938,7 +941,7 @@ class Session:
             entry = self._register_replacing(name, snap)
             entry.partition_by = partition_by
             entry.cluster_by = cluster_by
-            return self.spark.table(entry.view).count()
+            return rows
 
     def _partition_column(
         self, df: DataFrame, spec: str
@@ -1046,19 +1049,23 @@ class Session:
         GCS paths (reference bigquery.rs:52-148, S6) need the
         gcs-connector jar + credentials, absent here — surface the
         boundary as a clean loader error instead of a JVM stack trace.
-        On a real cluster the same ``spark.read.parquet`` call serves
-        ``gs://`` once the connector is on the classpath.
+        The table opens from its parquet footers
+        (:func:`readers.open_parquet`): neither its schema nor its row
+        count starts a Spark job.
         """
-        from bq_duckdb_spark.sources import readers
-
         _check_cloud_path(path)
-        return self._load_via(name, readers.read_parquet(self.spark, path, columns), columns)
+        df, rows = readers.open_parquet(self.spark, path)
+        return self._load_via(name, readers.coerce(df, columns), columns, rows)
 
-    def _load_via(self, name: str, df: DataFrame, columns: list[dict] | None) -> int:
+    def _load_via(
+        self, name: str, df: DataFrame, columns: list[dict] | None, rows: int | None = None
+    ) -> int:
+        """Register a loaded table; returns ``rows``, or counts the
+        table when the format does not record its row count."""
         entry = self._register_replacing(name, df)
         if columns:
             entry.columns = list(columns)
-        return self.spark.table(entry.view).count()
+        return self.spark.table(entry.view).count() if rows is None else rows
 
     def load_csv(
         self,
@@ -1074,8 +1081,6 @@ class Session:
         declared schema the text scan parses straight into the target
         types — no inference pass, which at 100 TB is a full extra read.
         """
-        from bq_duckdb_spark.sources import readers
-
         _check_cloud_path(path)
         return self._load_via(
             name, readers.read_csv(self.spark, path, columns, header, delimiter), columns
@@ -1086,8 +1091,6 @@ class Session:
     ) -> int:
         """``bq.loadJson`` — newline-delimited JSON (the BigQuery load
         format), declared schema skips the inference scan."""
-        from bq_duckdb_spark.sources import readers
-
         _check_cloud_path(path)
         return self._load_via(
             name, readers.read_json(self.spark, path, columns), columns
@@ -1098,8 +1101,6 @@ class Session:
     ) -> int:
         """``bq.loadOrc`` — ORC load with declared-schema coercion
         (columnar scan; pushdown and pruning as with parquet)."""
-        from bq_duckdb_spark.sources import readers
-
         _check_cloud_path(path)
         return self._load_via(
             name, readers.read_orc(self.spark, path, columns), columns

@@ -21,6 +21,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from bq_duckdb_spark.sources.readers import open_parquet
+
 EVENT_SCHEMA = T.StructType(
     [
         T.StructField("event_id", T.LongType()),
@@ -46,9 +48,9 @@ def read_event_stream(
     # runtime-settable; required for TIMESTAMP(NANOS) parquet regardless
     # of how the caller built the session
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # file streams need an explicit schema; probe the footers with a
-    # metadata-only batch read so either physical ts type works
-    schema = spark.read.parquet(path).schema
+    # file streams need an explicit schema; take it from the footer so
+    # either physical ts type works
+    schema = open_parquet(spark, path)[0].schema
     reader = spark.readStream.schema(schema)
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
@@ -574,7 +576,7 @@ def _read_earlier_state(spark: SparkSession, state_dir: str, batch_id: int):
     from pyspark.sql.utils import AnalysisException
 
     try:
-        state = spark.read.parquet(state_dir)
+        state = open_parquet(spark, state_dir)[0]
     except AnalysisException:
         return None
     return state.filter(F.col("batch") < batch_id)

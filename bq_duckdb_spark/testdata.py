@@ -8,6 +8,12 @@ long) and plain TIMESTAMP(MICROS) (arriving as TIMESTAMP_NTZ).
 :func:`normalize_event_ts` maps both to the same session-timezone
 ``timestamp`` column truncated to microseconds, matching DuckDB's
 ``epoch_us`` semantics for oracle parity.
+
+:func:`load_table` opens each table through
+:func:`bq_duckdb_spark.sources.readers.open_parquet`: the schema is
+Spark's conversion of the file's parquet footer under the session conf
+(so ``nanosAsLong`` applies), and no Spark job runs to infer it. The
+row count open_parquet sums from the footers is not needed here.
 """
 
 from __future__ import annotations
@@ -15,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from bq_duckdb_spark.sources.readers import open_parquet
 
 
 def normalize_event_ts(df: DataFrame, col: str = "ts") -> DataFrame:
@@ -37,7 +45,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = open_parquet(spark, f"{sf_dir}/{name}.parquet")[0]
     if name == "events":
         df = normalize_event_ts(df)
     return df

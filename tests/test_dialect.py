@@ -511,6 +511,13 @@ def test_func_renames_leave_string_literals_alone():
     assert "BQ_SPLIT(s, ',')" in got
 
 
+def test_cast_type_renames_leave_string_literals_alone():
+    """BigQuery cast-type names are renamed in code only: a literal that
+    spells a cast keeps its text, a real cast beside it is renamed."""
+    got = transpile("SELECT 'CAST(x AS INT64)' AS s, CAST(y AS INT64) AS t")
+    assert got == "SELECT 'CAST(x AS INT64)' AS s, CAST(y AS BIGINT) AS t"
+
+
 def test_array_agg_distinct_order_by():
     assert (
         transpile("SELECT ARRAY_AGG(DISTINCT x ORDER BY x) FROM t")

@@ -29,10 +29,11 @@ from pyspark.sql import functions as F
 from bq_duckdb_spark import get_spark
 from bq_duckdb_spark.ext import dedup, fuzzy
 from bq_duckdb_spark.ext import dedup_portable as dp
+from bq_duckdb_spark.sources.readers import open_parquet
 
 
 def _t(spark, sf_dir, name):
-    return spark.read.parquet(os.path.join(sf_dir, name + ".parquet"))
+    return open_parquet(spark, os.path.join(sf_dir, name + ".parquet"))[0]
 
 
 def pairs_for(spark, sf_dir: str, entry: str):

@@ -41,10 +41,11 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F
 
 from bq_duckdb_spark import get_spark
+from bq_duckdb_spark.sources.readers import open_parquet
 
 
 def synth_docs(spark, base_dir: str, copies: int, tag: str = "r"):
-    docs = spark.read.parquet(os.path.join(base_dir, "documents.parquet"))
+    docs = open_parquet(spark, os.path.join(base_dir, "documents.parquet"))[0]
     n = docs.agg(F.max("doc_id")).collect()[0][0] + 1
     reps = []
     for i in range(copies):
@@ -89,7 +90,7 @@ def synth_docs(spark, base_dir: str, copies: int, tag: str = "r"):
 
 
 def synth_embeddings(spark, base_dir: str, copies: int):
-    emb = spark.read.parquet(os.path.join(base_dir, "embeddings.parquet"))
+    emb = open_parquet(spark, os.path.join(base_dir, "embeddings.parquet"))[0]
     n = emb.agg(F.max("vec_id")).collect()[0][0] + 1
     reps = []
     for i in range(copies):
@@ -116,8 +117,8 @@ def synth_tpch(spark, base_dir: str, copies: int, out_dir: str) -> str:
     fixed isolates FACT-side scaling, which is what breaks at 100 TB).
     Written as parquet dirs named ``<table>.parquet`` so the contract
     functions (load_table) run against the tier unchanged."""
-    orders = spark.read.parquet(os.path.join(base_dir, "orders.parquet"))
-    li = spark.read.parquet(os.path.join(base_dir, "lineitem.parquet"))
+    orders = open_parquet(spark, os.path.join(base_dir, "orders.parquet"))[0]
+    li = open_parquet(spark, os.path.join(base_dir, "lineitem.parquet"))[0]
     n = orders.agg(F.max("o_orderkey")).collect()[0][0] + 1
     li_out, o_out = None, None
     for i in range(copies):
@@ -128,7 +129,7 @@ def synth_tpch(spark, base_dir: str, copies: int, out_dir: str) -> str:
     li_out.write.mode("overwrite").parquet(os.path.join(out_dir, "lineitem.parquet"))
     o_out.write.mode("overwrite").parquet(os.path.join(out_dir, "orders.parquet"))
     for dim in ("region", "nation", "customer", "supplier", "part"):
-        spark.read.parquet(os.path.join(base_dir, f"{dim}.parquet")).write.mode(
+        open_parquet(spark, os.path.join(base_dir, f"{dim}.parquet"))[0].write.mode(
             "overwrite"
         ).parquet(os.path.join(out_dir, f"{dim}.parquet"))
     return out_dir
@@ -182,11 +183,11 @@ def deep_probe(out_path: str) -> None:
     # warm every op once on the smallest tier: codegen + Python worker
     # spin-up must not inflate the small-tier timings (that would
     # UNDERstate the growth exponents)
-    warm_docs = spark.read.parquet(os.path.join(t25, "documents.parquet"))
+    warm_docs = open_parquet(spark, os.path.join(t25, "documents.parquet"))[0]
     for mk in doc_ops(warm_docs).values():
         mk().write.format("noop").mode("overwrite").save()
     for tier, d in doc_tiers:
-        docs = spark.read.parquet(os.path.join(d, "documents.parquet"))
+        docs = open_parquet(spark, os.path.join(d, "documents.parquet"))[0]
         n = docs.count()
         for name, mk in doc_ops(docs).items():
             t0 = time.time()
@@ -300,8 +301,8 @@ def main() -> None:
         }
 
     tiers = []
-    docs_001 = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
-    docs_01 = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
+    docs_001 = open_parquet(spark, "/root/testdata/sf0.01/documents.parquet")[0]
+    docs_01 = open_parquet(spark, "/root/testdata/sf0.1/documents.parquet")[0]
     docs_05 = synth_docs(spark, "/root/testdata/sf0.1", 5).localCheckpoint(
         eager=True
     )
@@ -323,7 +324,7 @@ def main() -> None:
         "dedup_exact", "minhash_pairs", "simhash_pairs", "simhash_blocked",
         "quality", "token_budget",
     }
-    emb_01 = spark.read.parquet("/root/testdata/sf0.1/embeddings.parquet")
+    emb_01 = open_parquet(spark, "/root/testdata/sf0.1/embeddings.parquet")[0]
     emb_05 = synth_embeddings(spark, "/root/testdata/sf0.1", 5).localCheckpoint(
         eager=True
     )
@@ -400,7 +401,7 @@ def main() -> None:
     from bq_duckdb_spark.operators import incremental as inc
     from bq_duckdb_spark.operators import timeseries as ts
 
-    cust_01 = spark.read.parquet("/root/testdata/sf0.1/customer.parquet")
+    cust_01 = open_parquet(spark, "/root/testdata/sf0.1/customer.parquet")[0]
     n_cust = cust_01.agg(F.max("c_custkey")).collect()[0][0] + 1
     cust_05 = None
     for i in range(5):
@@ -419,8 +420,8 @@ def main() -> None:
         from bq_duckdb_spark.ext.mleval import auc as auc_op
         from bq_duckdb_spark.ext.validate import check_not_null, check_unique, validation_report
 
-        li = spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet"))
-        orders = spark.read.parquet(os.path.join(sf_dir, "orders.parquet"))
+        li = open_parquet(spark, os.path.join(sf_dir, "lineitem.parquet"))[0]
+        orders = open_parquet(spark, os.path.join(sf_dir, "orders.parquet"))[0]
         hot = orders.where(F.col("o_totalprice") > 450000)
 
         def _auc():
