@@ -22,6 +22,7 @@ respects string literals and balanced parens.
 from __future__ import annotations
 
 import re
+from collections.abc import Iterator
 
 # ---------------------------------------------------------------------------
 # low-level SQL text scanning helpers (quote/paren aware)
@@ -672,13 +673,39 @@ def _rewrite_qualify(sql: str) -> str:
     return f"SELECT * FROM ( {head} ) WHERE {pred} {tail}".rstrip()
 
 
+_QUOTE_OR_COMMENT_RE = re.compile(r"['\"`#]|--|/\*(?!\+)")
+
+
+def _strip_comments(sql: str) -> str:
+    """Drop ``#`` and ``--`` line comments (the newline stays) and
+    ``/* … */`` block comments (one space stays; Spark's ``/*+ … */``
+    hints are kept), never inside a literal or a backticked name. The
+    scans that follow know no comments: a quote inside one would open a
+    literal, and its words would read as SQL."""
+    out, kept, i = [], 0, 0
+    while m := _QUOTE_OR_COMMENT_RE.search(sql, i):
+        i = m.start()
+        if m.group() in "'\"`":
+            i = _skip_string(sql, i)
+            continue
+        if m.group() == "/*":
+            end, space = sql.find("*/", i + 2), " "
+            end = len(sql) if end < 0 else end + 2
+        else:
+            end, space = sql.find("\n", i), ""
+            end = len(sql) if end < 0 else end
+        out += [sql[kept:i], space]
+        i = kept = end
+    return "".join(out) + sql[kept:]
+
+
 def _apply_outside_strings(sql: str, fn) -> str:
-    """Apply ``fn`` to the code segments of ``sql``, leaving '-quoted
-    string literals untouched (table names inside literals must never be
-    rewritten)."""
+    """Apply ``fn`` to the code segments of ``sql``, leaving string
+    literals ('…' and "…", both BigQuery's) untouched (table names inside
+    literals must never be rewritten)."""
     out, seg_start, i = [], 0, 0
     while i < len(sql):
-        if sql[i] == "'":
+        if sql[i] in "'\"":
             out.append(fn(sql[seg_start:i]))
             j = _skip_string(sql, i)
             out.append(sql[i:j])
@@ -715,19 +742,87 @@ def _rename_cast_types(sql: str) -> str:
     return _apply_outside_strings(sql, lambda seg: _CAST_TYPE_RE.sub(sub, seg))
 
 
+# words after which a table name may follow; after FROM and JOIN it may
+# also be a parenthesized join
+_TABLE_WORDS = {"FROM", "JOIN", "INTO", "UPDATE", "TABLE", "USING", "MERGE"}
+# words that end a FROM list at their paren depth
+_FROM_LIST_END = {
+    "WHERE", "GROUP", "HAVING", "QUALIFY", "WINDOW", "ORDER", "LIMIT", "UNION",
+    "INTERSECT", "EXCEPT", "SELECT", "SET", "WHEN", "VALUES",
+}
+_TOKEN_RE = re.compile(r"`[^`]*`|[A-Za-z_][\w.]*")
+
+
+def _table_positions(sql: str, pat: re.Pattern) -> Iterator[re.Match]:
+    """Matches of ``pat`` at the names of ``sql`` in table position: after
+    FROM, JOIN, INTO, UPDATE, TABLE, USING or MERGE, after a comma of a
+    FROM list at the FROM's paren depth, and first in a parenthesized
+    join; a column or alias spelled like a table is not in table
+    position, nor is the value of ``EXTRACT(part FROM value)``. Literals
+    are skipped; ``sql`` holds no comments (see :func:`_strip_comments`)."""
+    # per open bracket: inside a FROM list at its depth; None inside
+    # EXTRACT(…), whose FROM takes a value
+    from_list = [False]
+    expect = None  # "from": a table or a parenthesized join may follow; "name": a table
+    word = None  # the word just read, until anything but space follows it
+    i = 0
+    while i < len(sql):
+        c = sql[i]
+        if c.isspace():
+            i += 1
+            continue
+        if c in "'\"":
+            i, expect, word = _skip_string(sql, i), None, None
+            continue
+        tok = _TOKEN_RE.match(sql, i)
+        if tok is None:
+            if c in "([{":
+                opened = c == "(" and expect == "from"
+                from_list.append(None if c == "(" and word == "EXTRACT" else opened)
+                expect = "from" if opened else None
+            else:
+                if c in ")]}" and len(from_list) > 1:
+                    from_list.pop()
+                expect = "from" if c == "," and from_list[-1] else None
+            i, word = i + 1, None
+            continue
+        m = pat.match(sql, i) if expect else None
+        if m:
+            yield m
+            i, expect, word = m.end(), None, None
+            continue
+        word = tok.group(0).upper()
+        expect = None
+        if from_list[-1] is None:
+            pass
+        elif word in _TABLE_WORDS:
+            expect = "from" if word in ("FROM", "JOIN") else "name"
+            if word == "FROM":
+                from_list[-1] = True
+        elif word in _FROM_LIST_END:
+            from_list[-1] = False
+        i = tok.end()
+
+
+def _names_pattern(names) -> str:
+    """Regex source matching any of ``names``, bare or backticked (group 2
+    the name), longest first, never as a dotted part of a longer name."""
+    alts = "|".join(re.escape(n) for n in sorted(names, key=len, reverse=True))
+    return rf"(?<![\w.`])(`?)({alts})\1(?![\w.`])"
+
+
 def _map_tables(sql: str, table_mapping: dict[str, str]) -> str:
-    """Rewrite every registered table reference (bare or backticked,
-    case-insensitive, longest name first, never a dotted part of a
-    longer name) to ``<view> [TABLESAMPLE (…)] AS <alias>``: Spark's
-    order, alias last. The alias is the user's (``t c`` / ``t AS c``)
-    or else the name's last component, BigQuery's implicit alias, so
-    ``t.col`` and ``tbl.col`` still resolve against the view."""
+    """Rewrite every registered table reference in table position (see
+    :func:`_table_positions`) to ``<view> [TABLESAMPLE (…)] AS <alias>``:
+    Spark's order, alias last. Names match case-insensitively. The alias
+    is the user's (``t c`` / ``t AS c``) or else the name's last
+    component, BigQuery's implicit alias, so ``t.col`` and ``tbl.col``
+    still resolve against the view."""
     lookup = {name.lower(): view for name, view in table_mapping.items()}
-    names = "|".join(re.escape(n) for n in sorted(table_mapping, key=len, reverse=True))
     clause = "|".join(_CLAUSE_WORDS)
     pat = re.compile(
-        rf"(?<![\w.`])(`?)({names})\1(?![\w.`])"
-        rf"(?:\s+(?:AS\s+)?(?!(?:{clause})\b)([A-Za-z_]\w*))?"
+        _names_pattern(table_mapping)
+        + rf"(?:\s+(?:AS\s+)?(?!(?:{clause})\b)([A-Za-z_]\w*))?"
         r"(?:\s+TABLESAMPLE\s*(?:SYSTEM\s*)?\(([^)]*)\))?",
         re.IGNORECASE,
     )
@@ -737,7 +832,11 @@ def _map_tables(sql: str, table_mapping: dict[str, str]) -> str:
         ts = "" if sample is None else f" TABLESAMPLE ({sample})"
         return f"{lookup[name.lower()]}{ts} AS {alias or name.split('.')[-1]}"
 
-    return _apply_outside_strings(sql, lambda seg: pat.sub(sub, seg))
+    out, last = [], 0
+    for m in _table_positions(sql, pat):
+        out += [sql[last : m.start()], sub(m)]
+        last = m.end()
+    return "".join(out) + sql[last:]
 
 
 def transpile(sql: str, table_mapping: dict[str, str] | None = None) -> str:
@@ -749,8 +848,8 @@ def transpile(sql: str, table_mapping: dict[str, str] | None = None) -> str:
     TABLESAMPLE clause in Spark's order (see :func:`_map_tables`), so
     callers pass its output to Spark unchanged.
     """
-    # BigQuery accepts #-to-end-of-line comments; Spark doesn't
-    out = _apply_outside_strings(sql, lambda seg: re.sub(r"#[^\n]*", "", seg))
+    # BigQuery's #-comments are not Spark's, and no scan below knows comments
+    out = _strip_comments(sql)
     # type names before the mapping writes aliases: ``FROM t bool`` must
     # keep its alias
     out = _rename_cast_types(out)
@@ -852,32 +951,29 @@ def extract_cte_names(sql: str) -> list[str]:
 # dependency inference (reference pipeline.rs:595-614, 690-723 semantics)
 # ---------------------------------------------------------------------------
 
+def _referenced_tables(sql: str, tables: list[str]) -> set[str]:
+    """The lower-cased ``tables`` that ``sql`` (comments stripped) names
+    in table position."""
+    if not tables:
+        return set()
+    pat = re.compile(_names_pattern(tables), re.IGNORECASE)
+    return {m.group(2).lower() for m in _table_positions(sql, pat)}
+
+
 def is_table_referenced(sql: str, table: str) -> bool:
-    """Word-boundary, case-insensitive check that ``table`` appears in a
-    FROM / JOIN / comma-list position (so ``users`` does not match
-    ``user``, and select-list columns alone don't count)."""
-    escaped = re.escape(table)
-    # strip string literals so table names inside quotes don't count
-    stripped = re.sub(r"'(?:[^'\\]|\\.)*'", "''", sql)
-    pat = re.compile(
-        rf"(?:\bFROM\b|\bJOIN\b|\bINTO\b|,)\s*\(*\s*`?{escaped}`?(?![\w.])",
-        re.IGNORECASE,
-    )
-    if pat.search(stripped):
-        return True
-    # comma-separated FROM lists: FROM a, b — handled by the comma branch
-    return False
+    """Case-insensitive check that ``sql`` names ``table`` in table
+    position (see :func:`_table_positions`): ``users`` does not match
+    ``user``, and a column, alias, literal or comment spelled like the
+    table does not count."""
+    return bool(_referenced_tables(_strip_comments(sql), [table]))
 
 
 def extract_dependencies(sql: str, known_tables: list[str]) -> list[str]:
     """Return the sorted list of known table names referenced by ``sql``,
     excluding names bound as CTEs in the same statement (reference
     pipeline.rs:595-614; CTE-exclusion tests pipeline.rs:2118-2171)."""
+    sql = _strip_comments(sql)
     ctes = {c.lower() for c in extract_cte_names(sql)}
-    deps = []
-    for t in known_tables:
-        if t.lower() in ctes:
-            continue
-        if is_table_referenced(sql, t):
-            deps.append(t)
-    return sorted(set(deps), key=str.lower)
+    tables = [t for t in known_tables if t.lower() not in ctes]
+    found = _referenced_tables(sql, tables)
+    return sorted({t for t in tables if t.lower() in found}, key=str.lower)

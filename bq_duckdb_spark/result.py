@@ -3,22 +3,30 @@ format, src/executor/yachtsql.rs:207-231: ``schema.fields[]``,
 ``rows[].f[].v``, ``totalRows`` as string, ``jobComplete``).
 
 One columnar encoder, ``to_bq_json``: the result leaves Spark as Arrow
-record batches and stays columnar until the response text. Each column
-becomes a list of JSON value texts, chosen once by its Spark type:
+record batches and stays in Arrow until the response text. Each column
+becomes one Arrow array of JSON value texts, chosen once by its Spark
+type and built by compute kernels:
 
-- INT64, BOOL: Arrow cast to string
-- FLOAT64: ``repr`` (json's float text); NaN/±inf as quoted strings
-- STRING: json's C string escaper
-- TIMESTAMP, DATETIME: Arrow cast to string of the wall time in the
-  session zone, trimmed to the text of ``datetime.isoformat(sep=" ")``
+- INT64, BOOL: cast to string
+- FLOAT64, FLOAT: cast to float64, then to string, which writes
+  ``repr``'s shortest round-trip digits; ``.0`` is appended to integral
+  values, and the rows where Arrow's form differs from ``repr`` (NaN,
+  ±inf, and |x| outside [1e-4, 1e10) but not 0) take the per-value path
+- STRING: quoted by a kernel; the rows with a character json escapes
+  (outside printable ASCII, ``"``, ``\\``) take the per-value path
+- TIMESTAMP, DATETIME: cast to string of the wall time in the session
+  zone, trimmed to the text of ``datetime.isoformat(sep=" ")``, quoted
 - every other type: ``json.dumps(_encode_value(v))`` per value, after
   ``_from_arrow`` turns Arrow's Python values into the ones ``_encode_value``
   encodes (naive datetimes, MAP as dict in Spark's entry order, STRUCT
   keyed by its field names)
 
-The value texts fill one per-row template, and the joined rows are
-spliced into the response text. ``to_bq_response`` is the dict view for
-in-process callers."""
+The per-value path is json's own encoding of ``_encode_value``, so a
+patched row has the text the row-at-a-time reference writes. One
+row-wise join of the column texts and one join over all rows build the
+``rows`` text, which is spliced into the response text: Python handles
+only the head, the final string and the per-value rows.
+``to_bq_response`` is the dict view for in-process callers."""
 
 from __future__ import annotations
 
@@ -27,9 +35,7 @@ import datetime
 import decimal
 import json
 import math
-from json.encoder import encode_basestring_ascii
 
-import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame
@@ -39,8 +45,6 @@ from pyspark.sql import types as T
 from bq_duckdb_spark import types as bqtypes
 
 _INT_AND_BOOL = (T.BooleanType, T.ByteType, T.ShortType, T.IntegerType, T.LongType)
-# repr's text for NaN and ±inf → its JSON value text (_encode_value's str(v))
-_FLOAT_TEXT = {"nan": '"nan"', "inf": '"inf"', "-inf": '"-inf"'}
 # Spark types with no Python (hence no wire) value
 _NO_WIRE_VALUE = (T.YearMonthIntervalType, T.CalendarIntervalType)
 
@@ -172,36 +176,93 @@ def _from_arrow(dt: T.DataType):
     return None
 
 
-def _pylist(col: pa.ChunkedArray) -> list:
-    """``col`` as a Python list; for flat columns through NumPy, many
-    times faster than ``to_pylist`` (NULL becomes None, or NaN for
-    floats)."""
-    return col.to_numpy(zero_copy_only=False).tolist()
+# the type of every text array: 64-bit offsets, so no result overflows one
+_TEXT = pa.large_string()
+# a character json's ASCII string escaper rewrites
+_NEEDS_ESCAPE = r'[^ -~]|["\\]'
 
 
-def _column_texts(col: pa.ChunkedArray, dt: T.DataType) -> list[str]:
+def _concat(*parts, sep: str = "") -> pa.Array:
+    """Row-wise join of text arrays and literal strings with ``sep``
+    between parts (NULL if any part is NULL)."""
+    return pc.binary_join_element_wise(
+        *[p if isinstance(p, pa.Array) else pa.scalar(p, _TEXT) for p in parts],
+        pa.scalar(sep, _TEXT),
+    )
+
+
+def _quoted(text: pa.Array) -> pa.Array:
+    """Each value of ``text`` in double quotes (NULL stays NULL)."""
+    return _concat('"', text, '"')
+
+
+def _patched(text: pa.Array, mask: pa.Array, values: pa.Array) -> pa.Array:
+    """``text`` with the rows where ``mask`` holds replaced by the per-value
+    JSON text of ``values``: the rows whose kernel text would differ."""
+    if not pc.any(mask).as_py():
+        return text
+    patch = [json.dumps(_encode_value(v)) for v in pc.filter(values, mask).to_pylist()]
+    return pc.replace_with_mask(text, mask, pa.array(patch, _TEXT))
+
+
+def _float_texts(col: pa.Array) -> pa.Array:
+    """JSON value texts of a FLOAT64 or FLOAT column: ``repr`` of the
+    float64 value (a FLOAT is widened first: ``0.10000000149011612``),
+    NaN/±inf as quoted strings. Arrow's cast to string writes repr's
+    shortest round-trip digits; it drops the ``.0`` of an integral value,
+    appended here, and outside 1e-4 <= |x| < 1e10 (and for NaN/±inf) it
+    writes another form (``1e+10``, ``0.00001``), so those rows take the
+    per-value path."""
+    col = pc.cast(col, pa.float64())
+    text = pc.cast(col, _TEXT)
+    text = pc.if_else(pc.equal(pc.floor(col), col), _concat(text, ".0"), text)
+    mag = pc.abs(col)
+    arrow_form = pc.or_(
+        pc.equal(mag, 0), pc.and_(pc.greater_equal(mag, 1e-4), pc.less(mag, 1e10))
+    )
+    return _patched(text, pc.invert(arrow_form), col).fill_null("null")
+
+
+def _column_texts(col: pa.Array, dt: T.DataType) -> pa.Array:
     """One JSON value text per row of ``col`` (Spark type ``dt``)."""
     if isinstance(dt, _INT_AND_BOOL):
-        return _pylist(pc.cast(col, pa.string()).fill_null("null"))
+        return pc.cast(col, _TEXT).fill_null("null")
     if isinstance(dt, (T.FloatType, T.DoubleType)):
-        texts = [_FLOAT_TEXT.get(r, r) for r in map(repr, _pylist(col))]
-        if col.null_count:
-            for i in np.flatnonzero(_pylist(col.is_null())):
-                texts[i] = "null"
-        return texts
+        return _float_texts(col)
     if isinstance(dt, T.StringType):
-        return ["null" if s is None else encode_basestring_ascii(s) for s in _pylist(col)]
+        escape = pc.match_substring_regex(col, _NEEDS_ESCAPE)
+        return _patched(_quoted(pc.cast(col, _TEXT)), escape, col).fill_null("null")
     if isinstance(dt, (T.TimestampType, T.TimestampNTZType)):
         if isinstance(dt, T.TimestampType):  # wall time in the session zone
             col = pc.local_timestamp(col)
         # "YYYY-MM-DD HH:MM:SS.ffffff"; isoformat drops an all-zero fraction
-        text = pc.replace_substring_regex(pc.cast(col, pa.string()), r"\.000000$", "")
-        return _pylist(pc.binary_join_element_wise('"', text, '"', "").fill_null("null"))
+        text = pc.cast(col, _TEXT)
+        text = pc.if_else(
+            pc.ends_with(text, ".000000"), pc.utf8_slice_codeunits(text, 0, -7), text
+        )
+        return _quoted(text).fill_null("null")
     conv = _from_arrow(dt)
-    return [
-        json.dumps(_encode_value(v if conv is None or v is None else conv(v)))
-        for v in col.to_pylist()
-    ]
+    return pa.array(
+        [
+            json.dumps(_encode_value(v if conv is None or v is None else conv(v)))
+            for v in col.to_pylist()
+        ],
+        _TEXT,
+    )
+
+
+def _rows_text(cols: list[pa.Array], num_rows: int) -> str:
+    """The members of ``rows``, ``{"f": [{"v": …}, …]}`` per row joined by
+    ``", "``: one row-wise join of the column texts, then one join of all
+    rows whose separator closes a row and opens the next."""
+    if not num_rows:
+        return ""
+    if not cols:
+        return ", ".join(['{"f": []}'] * num_rows)
+    rows = _concat(*cols, sep='}, {"v": ')
+    one = pa.LargeListArray.from_arrays(pa.array([0, len(rows)], pa.int64()), rows)
+    inner = pc.binary_join(one, pa.scalar('}]}, {"f": [{"v": ', _TEXT))[0].as_py()
+    return '{"f": [{"v": ' + inner + "}]}"
 
 
 def _wire_type(bq_type: str) -> str:
@@ -225,9 +286,11 @@ def to_bq_json(df: DataFrame) -> str:
     carry exactly {name, type} — the reference adds no mode."""
     schema = df.schema
     table = _fetch_arrow(df)
-    cols = [_column_texts(table.column(i), f.dataType) for i, f in enumerate(schema.fields)]
-    row = '{"f": [' + ", ".join(['{"v": %s}'] * len(cols)) + "]}"
-    rows = ", ".join([row % r for r in (zip(*cols) if cols else [()] * table.num_rows)])
+    cols = [
+        _column_texts(table.column(i).combine_chunks(), f.dataType)
+        for i, f in enumerate(schema.fields)
+    ]
+    rows = _rows_text(cols, table.num_rows)
     head = json.dumps(
         {
             "kind": "bigquery#queryResponse",

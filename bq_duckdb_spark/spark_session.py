@@ -11,6 +11,10 @@ import os
 
 from pyspark.sql import SparkSession
 
+# the directory holding this package, on the Python workers' path so they
+# import it wherever the driver runs
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(
     app_name: str = "bq-duckdb-spark",
@@ -25,6 +29,8 @@ def get_spark(
     - UTC session timezone: matches DuckDB / BigQuery timestamp semantics
       so date extraction agrees with the correctness oracle.
     - Arrow enabled: vectorized Pandas-UDF path for the ext/ operators.
+    - Python workers start from ``pyworker`` (no zip-archive re-reads per
+      task) with this package importable.
     """
     cpus = cpus if cpus is not None else os.environ.get("SPARK_GRAFT_CPUS", "*")
     if shuffle_partitions is None:
@@ -42,6 +48,8 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config("spark.python.daemon.module", "bq_duckdb_spark.pyworker")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))

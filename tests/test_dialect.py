@@ -532,3 +532,102 @@ def test_array_agg_distinct_order_by():
         transpile("SELECT ARRAY_AGG(DISTINCT x) FROM t")
         == "SELECT ARRAY_AGG(DISTINCT x) FROM t"
     )
+
+
+# "…" is a BigQuery string literal like '…': no rewrite may edit it
+@pytest.mark.parametrize(
+    "bq, spark",
+    [
+        ('SELECT "a#b" AS s, "x" AS y', 'SELECT "a#b" AS s, "x" AS y'),
+        ('SELECT "from t" AS s FROM t', 'SELECT "from t" AS s FROM v_t AS t'),
+        ('SELECT "use SPLIT(a,b)" AS d', 'SELECT "use SPLIT(a,b)" AS d'),
+        ('SELECT "CAST(x AS INT64)" AS s', 'SELECT "CAST(x AS INT64)" AS s'),
+        ('SELECT "q\\"#" AS s # comment', 'SELECT "q\\"#" AS s '),
+        # a quote inside a comment opens no literal
+        ('SELECT a # keep "x" rows\nFROM t', "SELECT a \nFROM v_t AS t"),
+        ('SELECT a # 12" pipe\nFROM t', "SELECT a \nFROM v_t AS t"),
+        ('SELECT a -- keep "x" rows\nFROM t', "SELECT a \nFROM v_t AS t"),
+        ('SELECT a -- 12" pipe\nFROM t', "SELECT a \nFROM v_t AS t"),
+        ('SELECT a /* 12" */ FROM t', "SELECT a   FROM v_t AS t"),
+        ("SELECT a -- it's\nFROM t", "SELECT a \nFROM v_t AS t"),
+        # comment marks inside literals are data
+        ("SELECT '--x' AS s, \"#y\" AS d FROM t", "SELECT '--x' AS s, \"#y\" AS d FROM v_t AS t"),
+        ("SELECT /*+ BROADCAST(t) */ * FROM t", "SELECT /*+ BROADCAST(t) */ * FROM v_t AS t"),
+    ],
+)
+def test_double_quoted_literals_untouched(bq, spark):
+    assert transpile(bq, {"t": "v_t"}) == spark
+
+
+# only names in table position are table references
+_TV = {"t": "v_t", "v": "v_v", "other": "v_other"}
+
+
+@pytest.mark.parametrize(
+    "bq, spark",
+    [
+        ("SELECT id, v FROM t WHERE v > 1", "SELECT id, v FROM v_t AS t WHERE v > 1"),
+        ("SELECT x AS t FROM t", "SELECT x AS t FROM v_t AS t"),
+        (
+            "SELECT v, (SELECT MAX(t) FROM v) AS m FROM t, other WHERE t IN (1, 2) ORDER BY v, t",
+            "SELECT v, (SELECT MAX(t) FROM v_v AS v) AS m FROM v_t AS t, v_other AS other "
+            "WHERE t IN (1, 2) ORDER BY v, t",
+        ),
+        (
+            "SELECT * FROM (t JOIN v ON t.id = v.id), other o",
+            "SELECT * FROM (v_t AS t JOIN v_v AS v ON t.id = v.id), v_other AS o",
+        ),
+        (
+            "SELECT s.v FROM (SELECT v FROM t) s, v",
+            "SELECT s.v FROM (SELECT v FROM v_t AS t) s, v_v AS v",
+        ),
+        (
+            "WITH c AS (SELECT v FROM t) SELECT v, t FROM c JOIN v USING (id)",
+            "WITH c AS (SELECT v FROM v_t AS t) SELECT v, t FROM c JOIN v_v AS v USING (id)",
+        ),
+        # DELETE predicate, MERGE ON and SET fragments
+        (
+            "id IN (SELECT oid FROM other o) AND v > 0",
+            "id IN (SELECT oid FROM v_other AS o) AND v > 0",
+        ),
+        ("t.id = other.id AND v = other.v", "t.id = other.id AND v = other.v"),
+        ("v + t", "v + t"),
+        # a comment between the table word (or comma) and the name
+        ("SELECT * FROM -- main source\n t", "SELECT * FROM \n v_t AS t"),
+        ("SELECT * FROM t, -- second\n v", "SELECT * FROM v_t AS t, \n v_v AS v"),
+        (
+            "SELECT * FROM t /* big */ JOIN /* dim */ v ON t.id = v.id",
+            "SELECT * FROM v_t AS t   JOIN   v_v AS v ON t.id = v.id",
+        ),
+        # words inside a comment are not SQL
+        ("SELECT v -- read FROM t, v\nFROM t", "SELECT v \nFROM v_t AS t"),
+        # EXTRACT's FROM takes a value; a subquery inside it still reads tables
+        (
+            "SELECT EXTRACT(YEAR FROM v) AS y FROM v",
+            "SELECT EXTRACT(YEAR FROM v) AS y FROM v_v AS v",
+        ),
+        (
+            "SELECT EXTRACT (DAY FROM (SELECT MAX(t) FROM t)) AS d",
+            "SELECT EXTRACT (DAY FROM (SELECT MAX(t) FROM v_t AS t)) AS d",
+        ),
+    ],
+)
+def test_tables_mapped_only_in_table_position(bq, spark):
+    assert transpile(bq, _TV) == spark
+
+
+# dependency inference reads table position the way the mapping does
+@pytest.mark.parametrize(
+    "sql, deps",
+    [
+        ("SELECT id, u FROM t", ["t"]),
+        ("SELECT EXTRACT(YEAR FROM u) AS y FROM t", ["t"]),
+        ('SELECT "FROM u" AS s FROM t', ["t"]),
+        ("SELECT * FROM -- it's\n t -- JOIN u\n", ["t"]),
+        ("SELECT * FROM (t JOIN u ON t.id = u.id), v", ["t", "u", "v"]),
+        ("UPDATE t SET v = 1 WHERE id IN (SELECT id FROM u)", ["t", "u"]),
+        ("MERGE t USING u ON t.id = u.id WHEN MATCHED THEN UPDATE SET v = u.v", ["t", "u"]),
+    ],
+)
+def test_dependencies_only_in_table_position(sql, deps):
+    assert extract_dependencies(sql, ["t", "u", "v"]) == deps

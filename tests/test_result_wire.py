@@ -199,3 +199,60 @@ def test_intervals_without_wire_value_are_executor_errors(spark, sql):
         assert f"[method=bq.query, session={sid}]" in resp["error"]["message"]
     finally:
         call(3, "bq.destroySession", {"sessionId": sid})
+
+
+# Where the kernel texts differ from repr or from json's escaper and get
+# patched: the exponent-form boundaries 1e-4 and 1e10, integral values
+# (Arrow writes no ".0"), float32 widened to float64, NaN next to NULL,
+# and strings that need escaping next to strings that do not.
+BOUNDARY_PROBES = {
+    "float_exponent_boundaries": (
+        "SELECT * FROM UNNEST([1e-4, 9.999e-5, -1e-4, -9.999e-5, 9999999999.0, 1e10, "
+        "-9999999999.0, -1e10, 1e15, 1e16, 9999999999.5, 1.5e-7, 0.00012345]) AS f"
+    ),
+    "float_integral": (
+        "SELECT * FROM UNNEST([-0.0, 0.0, 1.0, 100.0, -7.0, 123456.0, -123456789.0, "
+        "4503599627370496.0, CAST('inf' AS DOUBLE), CAST('-inf' AS DOUBLE)]) AS f"
+    ),
+    "float32_widened": (
+        "SELECT CAST(0.1 AS FLOAT) a, CAST(1e10 AS FLOAT) b, CAST(1e-5 AS FLOAT) c, "
+        "CAST(100 AS FLOAT) d, CAST(-0.0 AS FLOAT) e, CAST('-inf' AS FLOAT) g"
+    ),
+    "float_null_next_to_nan": (
+        "SELECT * FROM UNNEST([CAST(NULL AS DOUBLE), CAST('NaN' AS DOUBLE), CAST(NULL AS DOUBLE), "
+        "2.5, CAST('NaN' AS DOUBLE)]) AS f"
+    ),
+    "strings_escaped_and_plain": (
+        "SELECT * FROM UNNEST(['plain', 'q\"uote', 'back\\\\slash', 'tab\\tx', 'ünï', "
+        "CAST(NULL AS STRING), '~ !', CONCAT('del', CHR(127)), 'plain again', '']) AS s"
+    ),
+}
+
+
+def _assert_same_text(got: str, want: str) -> None:
+    """Byte equality; a mismatch reports where, not a diff of megabytes."""
+    if got != want:
+        i = next((k for k, (a, b) in enumerate(zip(got, want)) if a != b), len(want))
+        pytest.fail(f"differ at {i}: got {got[i - 60 : i + 60]!r}, want {want[i - 60 : i + 60]!r}")
+
+
+@pytest.mark.parametrize("name", sorted(BOUNDARY_PROBES))
+def test_kernel_text_boundaries_match_row_reference(bq, name):
+    df = bq.query(BOUNDARY_PROBES[name])
+    _assert_same_text(to_bq_json(df), _reference(df))
+
+
+def test_multi_chunk_result_matches_row_reference(spark):
+    """25k rows from 4 partitions arrive as several Arrow batches; every
+    column's texts and the row join must line up across them."""
+    df = spark.range(0, 25_000, 1, 4).selectExpr(
+        "id AS i",
+        "CASE WHEN id % 101 = 0 THEN NULL WHEN id % 103 = 0 THEN CAST('NaN' AS DOUBLE) "
+        "ELSE (id - 12345) * POW(10, id % 31 - 15) / 7 END AS f",
+        "CASE WHEN id % 89 = 0 THEN NULL WHEN id % 97 = 0 THEN CONCAT('é\"', id) "
+        "ELSE CONCAT('s', id) END AS s",
+        "IF(id % 113 = 0, NULL, TIMESTAMP '2024-01-01 00:00:00' + make_interval(0, 0, 0, 0, 0, 0, id * 0.25)) AS t",
+    )
+    got = to_bq_json(df)
+    _assert_same_text(got, _reference(df))
+    assert json.loads(got)["totalRows"] == "25000"
