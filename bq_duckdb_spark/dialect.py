@@ -15,8 +15,17 @@ Two jobs (SURVEY.md §4.2, §2.10):
    re-implemented: word-boundary matching, CTE-name exclusion,
    case-insensitive, sorted output.
 
-No sqlglot in this environment — the shim is a hand-written scanner that
-respects string literals and balanced parens.
+No sqlglot in this environment — the shim is a hand-written scanner with
+one literal rule: only :func:`_skip_string` decides where a '…', "…" or
+`…` literal ends, and every rewrite finds its next match in code through
+:func:`_search_code`, so no rewrite edits literal data. A BigQuery
+function that Spark spells or shapes differently is one entry of
+``_CALLS``: a new name, or a rewriter of its arguments.
+
+transpile's passes, in order: drop comments; rename cast types; map
+table references; TABLESAMPLE SYSTEM; every ``_CALLS`` call in one pass,
+inner calls first; UNNEST in FROM/JOIN/comma position; array subscripts;
+array literals; brace struct literals; QUALIFY.
 """
 
 from __future__ import annotations
@@ -47,79 +56,65 @@ def _skip_string(sql: str, i: int) -> int:
     return j
 
 
+_QUOTE_RE = re.compile(r"['\"`]")
+
+
+def _search_code(pat: re.Pattern, sql: str, pos: int = 0) -> re.Match | None:
+    """The next match of ``pat`` at or after ``pos`` (a position in code)
+    that starts outside '…', "…" and `…`, or None."""
+    m = pat.search(sql, pos)
+    while m:
+        q = _QUOTE_RE.search(sql, pos, m.start())
+        if q is None:
+            return m
+        pos = _skip_string(sql, q.start())
+        if pos > m.start():
+            m = pat.search(sql, pos)
+    return None
+
+
+def _sub_code(pat: re.Pattern, repl, sql: str) -> str:
+    """``pat.sub(repl, sql)`` over the matches :func:`_search_code` finds."""
+    out, last = [], 0
+    while m := _search_code(pat, sql, last):
+        out += [sql[last : m.start()], repl(m)]
+        last = m.end()
+    return "".join(out) + sql[last:]
+
+
+_BRACKET_RE = {"(": re.compile(r"[()]"), "[": re.compile(r"[\[\]]"), "{": re.compile(r"[{}]")}
+
+
 def _find_matching_paren(sql: str, open_idx: int) -> int:
-    """Index of the ')' matching the '(' at open_idx (string-aware)."""
-    depth = 0
-    i = open_idx
-    while i < len(sql):
-        c = sql[i]
-        if c in "'\"`":
-            i = _skip_string(sql, i)
-            continue
-        if c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-            if depth == 0:
-                return i
-        i += 1
+    """Index of the bracket closing the ``(``, ``[`` or ``{`` at
+    ``open_idx``; only brackets of that kind count."""
+    opener, depth, i = sql[open_idx], 0, open_idx
+    while m := _search_code(_BRACKET_RE[opener], sql, i):
+        depth += 1 if m.group() == opener else -1
+        if depth == 0:
+            return m.start()
+        i = m.end()
     raise ValueError(f"Unbalanced parentheses in SQL starting at {open_idx}")
+
+
+_ARG_PUNCT_RE = re.compile(r"[,()\[\]]")
 
 
 def _split_top_level_args(s: str) -> list[str]:
     """Split a function-argument string on top-level commas."""
-    args, depth, cur, i = [], 0, [], 0
-    while i < len(s):
-        c = s[i]
-        if c in "'\"`":
-            j = _skip_string(s, i)
-            cur.append(s[i:j])
-            i = j
-            continue
+    args, depth, start, i = [], 0, 0, 0
+    while m := _search_code(_ARG_PUNCT_RE, s, i):
+        c, i = m.group(), m.end()
         if c in "([":
             depth += 1
         elif c in ")]":
             depth -= 1
-        if c == "," and depth == 0:
-            args.append("".join(cur).strip())
-            cur = []
-        else:
-            cur.append(c)
-        i += 1
-    if cur:
-        args.append("".join(cur).strip())
+        elif depth == 0:
+            args.append(s[start : m.start()].strip())
+            start = i
+    if start < len(s):
+        args.append(s[start:].strip())
     return args
-
-
-def _rewrite_calls(sql: str, func: str, rewriter) -> str:
-    """Rewrite every ``func( … )`` call (case-insensitive, balanced parens).
-
-    ``rewriter(args: list[str]) -> str | None`` — None keeps the original.
-    """
-    pat = re.compile(rf"\b{func}\s*\(", re.IGNORECASE)
-    out = []
-    i = 0
-    while True:
-        m = pat.search(sql, i)
-        if not m:
-            out.append(sql[i:])
-            break
-        open_idx = sql.index("(", m.start())
-        try:
-            close_idx = _find_matching_paren(sql, open_idx)
-        except ValueError:
-            out.append(sql[i:])
-            break
-        inner = sql[open_idx + 1 : close_idx]
-        # recurse into nested calls first
-        inner_rewritten = _rewrite_calls(inner, func, rewriter)
-        replacement = rewriter(_split_top_level_args(inner_rewritten))
-        if replacement is None:
-            replacement = sql[m.start() : open_idx + 1] + inner_rewritten + ")"
-        out.append(sql[i : m.start()])
-        out.append(replacement)
-        i = close_idx + 1
-    return "".join(out)
 
 
 # ---------------------------------------------------------------------------
@@ -217,6 +212,9 @@ _CLAUSE_WORDS = {
 }
 
 
+_UNNEST_RE = re.compile(r"(\bFROM\s+|,\s*|\bJOIN\s+)UNNEST\s*\(", re.IGNORECASE)
+
+
 def _unnest_from(sql: str) -> str:
     """Rewrite ``FROM UNNEST(expr) [AS] alias [WITH OFFSET [AS] o]``
     → ``FROM (SELECT explode/posexplode(expr) …)`` and correlated
@@ -224,12 +222,8 @@ def _unnest_from(sql: str) -> str:
     ``WITH OFFSET`` maps to posexplode's position output (0-based, same
     as BigQuery's offset).
     """
-    pat = re.compile(r"(\bFROM\s+|,\s*|\bJOIN\s+)UNNEST\s*\(", re.IGNORECASE)
-    while True:
-        m = pat.search(sql)
-        if not m:
-            return sql
-        open_idx = sql.index("(", m.end() - 1)
+    while m := _search_code(_UNNEST_RE, sql):
+        open_idx = m.end() - 1
         close_idx = _find_matching_paren(sql, open_idx)
         expr = sql[open_idx + 1 : close_idx]
         rest = sql[close_idx + 1 :]
@@ -250,8 +244,7 @@ def _unnest_from(sql: str) -> str:
         if om:
             rest_after = rest_after[om.end() :]
         lead = m.group(1)
-        correlated = lead.strip().rstrip(",") == "" or lead.strip() == ","
-        if correlated:
+        if lead.startswith(","):
             # table, UNNEST(col) alias → LATERAL VIEW
             repl = (
                 f" LATERAL VIEW posexplode({expr}) AS {off}, {alias} "
@@ -265,51 +258,28 @@ def _unnest_from(sql: str) -> str:
                 else f"{lead}(SELECT explode({expr}) AS {alias}) "
             )
         sql = sql[: m.start()] + repl + rest_after
+    return sql
 
 
-_ARRAY_LITERAL_SAFE_PREV = re.compile(r"[\w\)\]'\"`]$")
+_ARRAY_LITERAL_RE = re.compile(r"(?<![\w)\]'\"`])\[")
 
 
 def _bracket_literals(sql: str) -> str:
     """BigQuery array literal ``[1, 2, 3]`` → ``array(1, 2, 3)``.
 
-    A ``[`` directly following an identifier/``)``/``]`` is subscript
-    indexing and is left alone.
+    A ``[`` directly following an identifier/``)``/``]``/literal is
+    subscript indexing and is left alone.
     """
-    out = []
     i = 0
-    while i < len(sql):
-        c = sql[i]
-        if c in "'\"`":
-            j = _skip_string(sql, i)
-            out.append(sql[i:j])
-            i = j
-            continue
-        if c == "[":
-            # subscript indexing only when the bracket directly follows an
-            # identifier/)/'] with no whitespace (arr[0]); otherwise literal
-            prev = "".join(out)
-            if not _ARRAY_LITERAL_SAFE_PREV.search(prev):
-                # find matching ]
-                depth, j = 0, i
-                while j < len(sql):
-                    if sql[j] in "'\"`":
-                        j = _skip_string(sql, j)
-                        continue
-                    if sql[j] == "[":
-                        depth += 1
-                    elif sql[j] == "]":
-                        depth -= 1
-                        if depth == 0:
-                            break
-                    j += 1
-                inner = _bracket_literals(sql[i + 1 : j])
-                out.append(f"array({inner})")
-                i = j + 1
-                continue
-        out.append(c)
-        i += 1
-    return "".join(out)
+    while m := _search_code(_ARRAY_LITERAL_RE, sql, i):
+        i = m.start()
+        try:
+            j = _find_matching_paren(sql, i)
+        except ValueError:  # unclosed: the literal runs to the end
+            j = len(sql)
+        sql = f"{sql[:i]}array({sql[i + 1 : j]}){sql[j + 1 :]}"
+        i += len("array(")
+    return sql
 
 
 _STRUCT_BRACE_RE = re.compile(r"\{\s*'")
@@ -318,66 +288,49 @@ _STRUCT_BRACE_RE = re.compile(r"\{\s*'")
 def _brace_struct_literals(sql: str) -> str:
     """DuckDB-style struct literal ``{'k': v, …}`` (accepted by the
     reference engine, src/utils.rs:13-19) → ``named_struct('k', v, …)``."""
-    while True:
-        m = _STRUCT_BRACE_RE.search(sql)
-        if not m:
-            return sql
-        # find matching }
-        depth, j = 0, m.start()
-        while j < len(sql):
-            if sql[j] in "'\"`":
-                j = _skip_string(sql, j)
-                continue
-            if sql[j] == "{":
-                depth += 1
-            elif sql[j] == "}":
-                depth -= 1
-                if depth == 0:
-                    break
-            j += 1
-        inner = sql[m.start() + 1 : j]
-        pairs = _split_top_level_args(inner)
+    while m := _search_code(_STRUCT_BRACE_RE, sql):
+        try:
+            j = _find_matching_paren(sql, m.start())
+        except ValueError:  # unclosed: the literal runs to the end
+            j = len(sql)
         fields = []
-        for p in pairs:
+        for p in _split_top_level_args(sql[m.start() + 1 : j]):
             k, _, v = p.partition(":")
             fields.append(f"{k.strip()}, {v.strip()}")
         sql = sql[: m.start()] + "named_struct(" + ", ".join(fields) + ")" + sql[j + 1 :]
+    return sql
 
 
-_IDX_FUNC_RE = re.compile(
-    r"\s*(SAFE_OFFSET|SAFE_ORDINAL|OFFSET|ORDINAL)\s*\(", re.IGNORECASE
+_INDEX_RE = re.compile(
+    r"\[\s*(SAFE_OFFSET|SAFE_ORDINAL|OFFSET|ORDINAL)\s*\(", re.IGNORECASE
 )
 
 
 def _operand_start(sql: str, lb: int) -> int:
     """Start index of the primary expression ending just before ``lb``
     (an identifier chain with balanced call/index groups, e.g.
-    ``f(x).arr`` in ``f(x).arr[SAFE_OFFSET(0)]``)."""
+    ``f(x).arr`` in ``f(x).arr[SAFE_OFFSET(0)]``). A forward scan pairs
+    each closing bracket and backticked name with its start, so the walk
+    back never reads a literal."""
+    start_of, opened, i = {}, [], 0
+    while i < lb:
+        c = sql[i]
+        if c in "'\"`":
+            j = _skip_string(sql, i)
+            if c == "`":
+                start_of[j - 1] = i
+            i = j
+            continue
+        if c in "([":
+            opened.append(i)
+        elif c in ")]":  # an unopened one reaches back to the start
+            start_of[i] = opened.pop() if opened else 0
+        i += 1
     i = lb - 1
     while i >= 0 and sql[i].isspace():
         i -= 1
-    while i >= 0:
-        c = sql[i]
-        if c in ")]":
-            depth = 1
-            i -= 1
-            while i >= 0 and depth:
-                cc = sql[i]
-                if cc in "'\"`":  # backward over a quoted literal
-                    j = i - 1
-                    while j >= 0 and sql[j] != cc:
-                        j -= 1
-                    i = j
-                elif cc in ")]":
-                    depth += 1
-                elif cc in "([":
-                    depth -= 1
-                i -= 1
-            continue
-        if c.isalnum() or c in "_.`":
-            i -= 1
-            continue
-        break
+    while i >= 0 and (i in start_of or sql[i].isalnum() or sql[i] in "_."):
+        i = start_of.get(i, i) - 1
     return i + 1
 
 
@@ -391,19 +344,9 @@ def _rewrite_array_indexing(sql: str) -> str:
       ``try_element_at(arr, …)`` (NULL out of range)
     """
     i = 0
-    while i < len(sql):
-        c = sql[i]
-        if c in "'\"`":
-            i = _skip_string(sql, i)
-            continue
-        if c != "[":
-            i += 1
-            continue
-        m = _IDX_FUNC_RE.match(sql, i + 1)
-        if not m:
-            i += 1
-            continue
-        open_idx = sql.index("(", m.end() - 1)
+    while m := _search_code(_INDEX_RE, sql, i):
+        i = m.start()
+        open_idx = m.end() - 1
         try:
             close_idx = _find_matching_paren(sql, open_idx)
         except ValueError:
@@ -430,48 +373,6 @@ def _rewrite_array_indexing(sql: str) -> str:
         sql = sql[:start] + repl + sql[j + 1 :]
         i = start  # rescan: the index expression may nest more accesses
     return sql
-
-
-_SIMPLE_FUNC_RENAMES = {
-    "REGEXP_CONTAINS": "regexp_like",
-    "SAFE_CAST": "try_cast",
-    "SAFE_DIVIDE": "try_divide",
-    "IFNULL": "coalesce",
-    "STARTS_WITH": "startswith",
-    "ENDS_WITH": "endswith",
-    "BYTE_LENGTH": "octet_length",
-    "CHARACTER_LENGTH": "length",
-    "ARRAY_LENGTH": "size",
-    "STRING_AGG": "string_agg",  # Spark 4 has string_agg natively
-    # BigQuery SPLIT takes a LITERAL delimiter; Spark's split() takes a
-    # regex ('a.b' → ['','','']). BQ_SPLIT (functions/bigquery.py)
-    # regex-quotes the delimiter. The builtin name can't be overridden.
-    "SPLIT": "BQ_SPLIT",
-    "ARRAY_CONCAT": "concat",
-    "ARRAY_TO_STRING": "array_join",
-    "ARRAY_REVERSE": "reverse",
-    "COUNTIF": "count_if",
-    "LOGICAL_AND": "bool_and",
-    "LOGICAL_OR": "bool_or",
-    # NET.* URL functions (functions/bigquery.py supplies the bodies;
-    # the dot cannot appear in a Spark function name)
-    "NET.HOST": "NET_HOST",
-    "NET.REG_DOMAIN": "NET_REG_DOMAIN",
-    # BigQuery FORMAT is C-style %-formatting — exactly format_string
-    "FORMAT": "format_string",
-    # SAFE_ arithmetic returns NULL instead of erroring on overflow —
-    # exactly Spark's try_ family
-    "SAFE_ADD": "try_add",
-    "SAFE_SUBTRACT": "try_subtract",
-    "SAFE_MULTIPLY": "try_multiply",
-    # JSON scalar accessors: BigQuery names → Spark's get_json_object
-    # (same $.path syntax; both return the UNQUOTED scalar as STRING).
-    # JSON_EXTRACT / JSON_QUERY return JSON-encoded text (string scalars
-    # keep their quotes) — rewritten via variant in transpile(), not here.
-    "JSON_EXTRACT_SCALAR": "get_json_object",
-    "JSON_VALUE": "get_json_object",
-    "TO_JSON_STRING": "to_json",
-}
 
 
 def _json_as_text(args: list[str]):
@@ -627,24 +528,107 @@ def _array_agg(args: list[str]):
     return f"reverse({base})" if desc else base
 
 
+# Every BigQuery function transpile rewrites, by name. A string renames
+# the function and keeps its argument text; a rewriter gets the split
+# arguments and returns the Spark text, or None to keep the call.
+_CALLS = {
+    "REGEXP_CONTAINS": "regexp_like",
+    "SAFE_CAST": "try_cast",
+    "SAFE_DIVIDE": "try_divide",
+    "IFNULL": "coalesce",
+    "STARTS_WITH": "startswith",
+    "ENDS_WITH": "endswith",
+    "BYTE_LENGTH": "octet_length",
+    "CHARACTER_LENGTH": "length",
+    "ARRAY_LENGTH": "size",
+    "STRING_AGG": "string_agg",  # Spark 4 has string_agg natively
+    # BigQuery SPLIT takes a LITERAL delimiter; Spark's split() takes a
+    # regex ('a.b' → ['','','']). BQ_SPLIT (functions/bigquery.py)
+    # regex-quotes the delimiter. The builtin name can't be overridden.
+    "SPLIT": "BQ_SPLIT",
+    "ARRAY_CONCAT": "concat",
+    "ARRAY_TO_STRING": "array_join",
+    "ARRAY_REVERSE": "reverse",
+    "COUNTIF": "count_if",
+    "LOGICAL_AND": "bool_and",
+    "LOGICAL_OR": "bool_or",
+    # NET.* URL functions (functions/bigquery.py supplies the bodies;
+    # the dot cannot appear in a Spark function name)
+    "NET.HOST": "NET_HOST",
+    "NET.REG_DOMAIN": "NET_REG_DOMAIN",
+    # BigQuery FORMAT is C-style %-formatting — exactly format_string
+    "FORMAT": "format_string",
+    # SAFE_ arithmetic returns NULL instead of erroring on overflow —
+    # exactly Spark's try_ family
+    "SAFE_ADD": "try_add",
+    "SAFE_SUBTRACT": "try_subtract",
+    "SAFE_MULTIPLY": "try_multiply",
+    # JSON scalar accessors: BigQuery names → Spark's get_json_object
+    # (same $.path syntax; both return the UNQUOTED scalar as STRING).
+    # JSON_EXTRACT / JSON_QUERY return JSON-encoded text (string scalars
+    # keep their quotes), re-encoded via variant.
+    "JSON_EXTRACT_SCALAR": "get_json_object",
+    "JSON_VALUE": "get_json_object",
+    "TO_JSON_STRING": "to_json",
+    "JSON_EXTRACT": _json_as_text,
+    "JSON_QUERY": _json_as_text,
+    "ARRAY_AGG": _array_agg,
+    "GENERATE_ARRAY": _generate_array,
+    "GENERATE_DATE_ARRAY": _generate_date_array,
+    "GENERATE_TIMESTAMP_ARRAY": _generate_date_array,
+    "REGEXP_EXTRACT_ALL": _regexp_extract_all,
+    "REGEXP_EXTRACT": _regexp_extract,
+    "DATE_ADD": _date_add_sub("+"),
+    "DATE_SUB": _date_add_sub("-"),
+    "TIMESTAMP_ADD": _date_add_sub("+"),
+    "TIMESTAMP_SUB": _date_add_sub("-"),
+    "DATETIME_ADD": _date_add_sub("+"),
+    "DATETIME_SUB": _date_add_sub("-"),
+    "DATE_DIFF": _date_diff,
+    "TIMESTAMP_DIFF": _ts_diff,
+    "DATETIME_DIFF": _ts_diff,
+    "DATE_TRUNC": _trunc("DATE"),
+    "TIMESTAMP_TRUNC": _trunc(None),
+    "DATETIME_TRUNC": _trunc(None),
+}
+_CALL_RE = re.compile(
+    r"\b(" + "|".join(map(re.escape, _CALLS)) + r")\s*\(", re.IGNORECASE
+)
+
+
+def _rewrite_calls(sql: str) -> str:
+    """Rewrite every call named in ``_CALLS`` (case-insensitive, balanced
+    parens), inner calls first."""
+    out, i = [], 0
+    while m := _search_code(_CALL_RE, sql, i):
+        open_idx, rw = m.end() - 1, _CALLS[m.group(1).upper()]
+        try:
+            close_idx = _find_matching_paren(sql, open_idx)
+        except ValueError:  # unclosed: only a rename applies
+            out += [sql[i : m.start()], f"{rw}(" if isinstance(rw, str) else m.group()]
+            i = m.end()
+            continue
+        inner = _rewrite_calls(sql[open_idx + 1 : close_idx])
+        new = f"{rw}({inner})" if isinstance(rw, str) else rw(_split_top_level_args(inner))
+        if new is None:
+            new = f"{sql[m.start() : open_idx + 1]}{inner})"
+        out += [sql[i : m.start()], new]
+        i = close_idx + 1
+    return "".join(out) + sql[i:]
+
+
 def _find_top_level_keyword(sql: str, keyword: str, start: int = 0) -> int:
     """Index of ``keyword`` at paren-depth 0 outside strings, or -1."""
-    pat = re.compile(rf"\b{keyword}\b", re.IGNORECASE)
+    pat = re.compile(rf"[()]|\b{keyword}\b", re.IGNORECASE)
     depth, i = 0, start
-    while i < len(sql):
-        c = sql[i]
-        if c in "'\"`":
-            i = _skip_string(sql, i)
-            continue
-        if c == "(":
+    while m := _search_code(pat, sql, i):
+        if m.group() == "(":
             depth += 1
-        elif c == ")":
+        elif m.group() == ")":
             depth -= 1
         elif depth == 0:
-            m = pat.match(sql, i)
-            if m:
-                return i
-        i += 1
+            return m.start()
+        i = m.end()
     return -1
 
 
@@ -673,7 +657,7 @@ def _rewrite_qualify(sql: str) -> str:
     return f"SELECT * FROM ( {head} ) WHERE {pred} {tail}".rstrip()
 
 
-_QUOTE_OR_COMMENT_RE = re.compile(r"['\"`#]|--|/\*(?!\+)")
+_COMMENT_RE = re.compile(r"#|--|/\*(?!\+)")
 
 
 def _strip_comments(sql: str) -> str:
@@ -682,12 +666,9 @@ def _strip_comments(sql: str) -> str:
     hints are kept), never inside a literal or a backticked name. The
     scans that follow know no comments: a quote inside one would open a
     literal, and its words would read as SQL."""
-    out, kept, i = [], 0, 0
-    while m := _QUOTE_OR_COMMENT_RE.search(sql, i):
+    out, kept = [], 0
+    while m := _search_code(_COMMENT_RE, sql, kept):
         i = m.start()
-        if m.group() in "'\"`":
-            i = _skip_string(sql, i)
-            continue
         if m.group() == "/*":
             end, space = sql.find("*/", i + 2), " "
             end = len(sql) if end < 0 else end + 2
@@ -695,25 +676,8 @@ def _strip_comments(sql: str) -> str:
             end, space = sql.find("\n", i), ""
             end = len(sql) if end < 0 else end
         out += [sql[kept:i], space]
-        i = kept = end
+        kept = end
     return "".join(out) + sql[kept:]
-
-
-def _apply_outside_strings(sql: str, fn) -> str:
-    """Apply ``fn`` to the code segments of ``sql``, leaving string
-    literals ('…' and "…", both BigQuery's) untouched (table names inside
-    literals must never be rewritten)."""
-    out, seg_start, i = [], 0, 0
-    while i < len(sql):
-        if sql[i] in "'\"":
-            out.append(fn(sql[seg_start:i]))
-            j = _skip_string(sql, i)
-            out.append(sql[i:j])
-            i = seg_start = j
-        else:
-            i += 1
-    out.append(fn(sql[seg_start:]))
-    return "".join(out)
 
 
 # BigQuery type names → Spark SQL type names, applied in `AS <type>` cast
@@ -736,10 +700,9 @@ _CAST_TYPE_RE = re.compile(
 
 
 def _rename_cast_types(sql: str) -> str:
-    def sub(m):
-        return f"{m.group(1)}{_TYPE_RENAMES[m.group(2).upper()]}"
-
-    return _apply_outside_strings(sql, lambda seg: _CAST_TYPE_RE.sub(sub, seg))
+    return _sub_code(
+        _CAST_TYPE_RE, lambda m: f"{m.group(1)}{_TYPE_RENAMES[m.group(2).upper()]}", sql
+    )
 
 
 # words after which a table name may follow; after FROM and JOIN it may
@@ -750,7 +713,7 @@ _FROM_LIST_END = {
     "WHERE", "GROUP", "HAVING", "QUALIFY", "WINDOW", "ORDER", "LIMIT", "UNION",
     "INTERSECT", "EXCEPT", "SELECT", "SET", "WHEN", "VALUES",
 }
-_TOKEN_RE = re.compile(r"`[^`]*`|[A-Za-z_][\w.]*")
+_WORD_RE = re.compile(r"[A-Za-z_][\w.]*")
 
 
 def _table_positions(sql: str, pat: re.Pattern) -> Iterator[re.Match]:
@@ -771,10 +734,15 @@ def _table_positions(sql: str, pat: re.Pattern) -> Iterator[re.Match]:
         if c.isspace():
             i += 1
             continue
-        if c in "'\"":
+        m = pat.match(sql, i) if expect else None
+        if m:
+            yield m
+            i, expect, word = m.end(), None, None
+            continue
+        if c in "'\"`":
             i, expect, word = _skip_string(sql, i), None, None
             continue
-        tok = _TOKEN_RE.match(sql, i)
+        tok = _WORD_RE.match(sql, i)
         if tok is None:
             if c in "([{":
                 opened = c == "(" and expect == "from"
@@ -785,11 +753,6 @@ def _table_positions(sql: str, pat: re.Pattern) -> Iterator[re.Match]:
                     from_list.pop()
                 expect = "from" if c == "," and from_list[-1] else None
             i, word = i + 1, None
-            continue
-        m = pat.match(sql, i) if expect else None
-        if m:
-            yield m
-            i, expect, word = m.end(), None, None
             continue
         word = tok.group(0).upper()
         expect = None
@@ -839,6 +802,9 @@ def _map_tables(sql: str, table_mapping: dict[str, str]) -> str:
     return "".join(out) + sql[last:]
 
 
+_TABLESAMPLE_SYSTEM_RE = re.compile(r"\bTABLESAMPLE\s+SYSTEM\s*\(", re.IGNORECASE)
+
+
 def transpile(sql: str, table_mapping: dict[str, str] | None = None) -> str:
     """BigQuery SQL → Spark SQL.
 
@@ -855,42 +821,10 @@ def transpile(sql: str, table_mapping: dict[str, str] | None = None) -> str:
     out = _rename_cast_types(out)
     if table_mapping:
         out = _map_tables(out, table_mapping)
-
-    def _rename_code(segment: str) -> str:
-        # outside string literals only: common-word names (SPLIT, FORMAT,
-        # ARRAY_CONCAT, ...) must never corrupt literal data like "SPLIT("
-        for src, dst in _SIMPLE_FUNC_RENAMES.items():
-            # re.escape: dotted names like NET.HOST must not wildcard
-            segment = re.sub(
-                rf"\b{re.escape(src)}\s*\(", f"{dst}(", segment, flags=re.IGNORECASE
-            )
-        # BigQuery TABLESAMPLE SYSTEM (n PERCENT) → Spark TABLESAMPLE (n PERCENT)
-        # on references no mapping spelled (CTEs, subqueries)
-        return re.sub(
-            r"\bTABLESAMPLE\s+SYSTEM\s*\(", "TABLESAMPLE (", segment, flags=re.IGNORECASE
-        )
-
-    out = _apply_outside_strings(out, _rename_code)
-    out = _rewrite_calls(out, "ARRAY_AGG", _array_agg)
-    out = _rewrite_calls(out, "GENERATE_ARRAY", _generate_array)
-    out = _rewrite_calls(out, "GENERATE_DATE_ARRAY", _generate_date_array)
-    out = _rewrite_calls(out, "GENERATE_TIMESTAMP_ARRAY", _generate_date_array)
-    out = _rewrite_calls(out, "JSON_EXTRACT", _json_as_text)
-    out = _rewrite_calls(out, "JSON_QUERY", _json_as_text)
-    out = _rewrite_calls(out, "REGEXP_EXTRACT_ALL", _regexp_extract_all)
-    out = _rewrite_calls(out, "REGEXP_EXTRACT", _regexp_extract)
-    out = _rewrite_calls(out, "DATE_ADD", _date_add_sub("+"))
-    out = _rewrite_calls(out, "DATE_SUB", _date_add_sub("-"))
-    out = _rewrite_calls(out, "TIMESTAMP_ADD", _date_add_sub("+"))
-    out = _rewrite_calls(out, "TIMESTAMP_SUB", _date_add_sub("-"))
-    out = _rewrite_calls(out, "DATETIME_ADD", _date_add_sub("+"))
-    out = _rewrite_calls(out, "DATETIME_SUB", _date_add_sub("-"))
-    out = _rewrite_calls(out, "DATE_DIFF", _date_diff)
-    out = _rewrite_calls(out, "TIMESTAMP_DIFF", _ts_diff)
-    out = _rewrite_calls(out, "DATETIME_DIFF", _ts_diff)
-    out = _rewrite_calls(out, "DATE_TRUNC", _trunc("DATE"))
-    out = _rewrite_calls(out, "TIMESTAMP_TRUNC", _trunc(None))
-    out = _rewrite_calls(out, "DATETIME_TRUNC", _trunc(None))
+    # BigQuery TABLESAMPLE SYSTEM (n PERCENT) → Spark TABLESAMPLE (n PERCENT)
+    # on references no mapping spelled (CTEs, subqueries)
+    out = _sub_code(_TABLESAMPLE_SYSTEM_RE, lambda m: "TABLESAMPLE (", out)
+    out = _rewrite_calls(out)
     out = _unnest_from(out)
     out = _rewrite_array_indexing(out)
     out = _bracket_literals(out)
@@ -902,8 +836,6 @@ def transpile(sql: str, table_mapping: dict[str, str] | None = None) -> str:
 # ---------------------------------------------------------------------------
 # CTE-name extraction (reference pipeline.rs:616-688 semantics)
 # ---------------------------------------------------------------------------
-
-_WORD_RE = re.compile(r"[A-Za-z_][\w.]*")
 
 
 def extract_cte_names(sql: str) -> list[str]:

@@ -9,6 +9,7 @@ case-insensitivity.
 import pytest
 
 from bq_duckdb_spark.dialect import (
+    _CALLS,
     extract_cte_names,
     extract_dependencies,
     is_table_referenced,
@@ -631,3 +632,76 @@ def test_tables_mapped_only_in_table_position(bq, spark):
 )
 def test_dependencies_only_in_table_position(sql, deps):
     assert extract_dependencies(sql, ["t", "u", "v"]) == deps
+
+
+# an escaped quote inside a literal must not end it for the operand scan
+@pytest.mark.parametrize(
+    "bq, spark",
+    [
+        (
+            r"SELECT split('it\'s', 'x')[SAFE_OFFSET(0)] AS x",
+            r"SELECT try_element_at(BQ_SPLIT('it\'s', 'x'), (0) + 1) AS x",
+        ),
+        (
+            r"SELECT split('it\'s', 'x')[SAFE_ORDINAL(1)] AS x",
+            r"SELECT try_element_at(BQ_SPLIT('it\'s', 'x'), (1)) AS x",
+        ),
+        (
+            r'SELECT split("a\"b", "x")[SAFE_OFFSET(0)] AS x',
+            r'SELECT try_element_at(BQ_SPLIT("a\"b", "x"), (0) + 1) AS x',
+        ),
+    ],
+)
+def test_safe_index_after_escaped_quote(bq, spark):
+    assert transpile(bq) == spark
+
+
+def _call_snippet(name: str) -> str:
+    """A call of ``name`` with arguments its rewriter acts on."""
+    args = {
+        "ADD": "d, INTERVAL 1 DAY",
+        "SUB": "d, INTERVAL 1 DAY",
+        "DIFF": "a, b, DAY",
+        "TRUNC": "d, MONTH",
+        "AGG": "x ORDER BY y",
+    }.get(name.rsplit("_", 1)[-1], "a, b")
+    return f"{name}({args})"
+
+
+_REWRITTEN_SNIPPETS = [_call_snippet(name) for name in _CALLS] + [
+    "1 FROM UNNEST(a)",
+    "{'k': v}",
+    "[1, 2]",
+    "arr[OFFSET(0)]",
+    "arr[SAFE_OFFSET(0)]",
+    "1 FROM t QUALIFY rn = 1",
+    "1 FROM t TABLESAMPLE SYSTEM (10 PERCENT)",
+    "CAST(x AS INT64)",
+]
+
+
+# every rewrite family leaves literal data alone, in either quote kind
+@pytest.mark.parametrize("snippet", _REWRITTEN_SNIPPETS)
+@pytest.mark.parametrize("q", ["'", '"'])
+def test_rewrites_leave_literals_alone(snippet, q):
+    assert transpile(f"SELECT {snippet}") != f"SELECT {snippet}"
+    sql = f"SELECT {q}{snippet.replace(q, chr(92) + q)}{q} AS s"
+    assert transpile(sql) == sql
+
+
+# a literal holding the other quote kind ends where it ends
+@pytest.mark.parametrize(
+    "bq, spark",
+    [
+        (
+            """SELECT "it's" AS s, DATE_ADD(d, INTERVAL 1 DAY) AS e, IFNULL(x, 0) AS f""",
+            """SELECT "it's" AS s, (d + INTERVAL 1 DAY) AS e, coalesce(x, 0) AS f""",
+        ),
+        (
+            """SELECT 'a"b' AS s, DATE_ADD(d, INTERVAL 1 DAY) AS e, IFNULL(x, 0) AS f""",
+            """SELECT 'a"b' AS s, (d + INTERVAL 1 DAY) AS e, coalesce(x, 0) AS f""",
+        ),
+    ],
+)
+def test_calls_beside_other_quote_rewritten(bq, spark):
+    assert transpile(bq) == spark

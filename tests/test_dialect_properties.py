@@ -85,11 +85,20 @@ def test_dependencies_subset_of_known(names):
     assert all(d in names for d in deps)
 
 
-@given(ident, simple_value)
-def test_table_names_in_literals_never_rewritten(table, _):
-    sql = f"SELECT '{table}' AS s FROM {table}"
+# text every rewrite family would edit in code
+call_text = st.sampled_from([
+    "", "DATE_ADD(d, INTERVAL 1 DAY)", "UNNEST(a)", "x FROM UNNEST(a) AS y",
+    "DATE_TRUNC(d, MONTH)", "GENERATE_ARRAY(1, 3)", "SPLIT(s, ',')", "{'k': v}",
+    "[1, 2]", "a[SAFE_OFFSET(0)]", "CAST(x AS INT64)",
+])
+
+
+@given(ident, call_text, st.sampled_from(["'", '"']))
+def test_table_names_in_literals_never_rewritten(table, call, q):
+    body = f"{table} {call}".replace(q, "\\" + q)
+    sql = f"SELECT {q}{body}{q} AS s FROM {table}"
     out = transpile(sql, {table: "VIEWNAME"})
-    assert f"'{table}'" in out          # literal untouched
+    assert f"{q}{body}{q}" in out          # literal untouched
     assert re.search(r"FROM VIEWNAME\b", out)  # reference rewritten
 
 
@@ -101,7 +110,11 @@ def test_paren_matching(before, inner):
 
 
 @settings(max_examples=30)
-@given(st.from_regex(r"SELECT [a-z0-9_, ()'\[\]{}]{0,40}", fullmatch=True))
+@given(
+    st.from_regex(
+        r"SELECT (?:[a-z0-9_, ()'\"\\\[\]{}]|\[SAFE_OFFSET\(0\)\]){0,40}", fullmatch=True
+    )
+)
 def test_transpile_never_crashes_on_select_soup(sql):
     """transpile must be total: garbage in, string out (Spark's parser
     is the component that rejects bad SQL, not the shim)."""

@@ -94,6 +94,16 @@ def test_query_bq_response_shape(server, sid):
     assert res["rows"] == [{"f": [{"v": 1}, {"v": "hello"}]}]
 
 
+def test_query_with_escaped_quote_then_ping(server, sid):
+    """An escaped quote before a SAFE_OFFSET subscript transpiles in
+    bounded time: the query answers and the server still serves a ping."""
+    res = call(server, "bq.query", {
+        "sessionId": sid, "sql": r"SELECT split('it\'s', 'x')[SAFE_OFFSET(0)] AS x",
+    })
+    assert res["rows"] == [{"f": [{"v": "it's"}]}]
+    assert call(server, "bq.ping") == {"message": "pong"}
+
+
 def test_create_insert_query_roundtrip(server, sid):
     call(server, "bq.createTable",
          {"sessionId": sid, "tableName": "users",
