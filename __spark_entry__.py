@@ -15,6 +15,7 @@ Conventions for oracle parity:
 
 from __future__ import annotations
 
+import importlib
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -959,6 +960,32 @@ def oracle_bounds() -> dict[str, dict]:
     }
 
 
+# The modules whose queries() and oracle_sql() extend the base entries,
+# merged in this order. Every import inside them is in-package, so an
+# ImportError here is a broken module and must fail loudly, never drop
+# its entries.
+CONTRACT_MODULES = (
+    "bq_duckdb_spark.ext.contract",
+    "bq_duckdb_spark.contract_tier2",
+    "bq_duckdb_spark.ext.contract_pipeline",
+    "bq_duckdb_spark.ext.contract_portable",
+    "bq_duckdb_spark.contract_tier3",
+    "bq_duckdb_spark.contract_tier4",
+    "bq_duckdb_spark.contract_tier5",
+    "bq_duckdb_spark.contract_tpch",
+    "bq_duckdb_spark.contract_tier6",
+    "bq_duckdb_spark.contract_tier7",
+    "bq_duckdb_spark.contract_tier8",
+    "bq_duckdb_spark.contract_tier9",
+)
+
+
+def _contract_modules():
+    """(name, module) for every CONTRACT_MODULES entry, imported on
+    first use so importing this file stays cheap."""
+    return [(name, importlib.import_module(name)) for name in CONTRACT_MODULES]
+
+
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001; driver checks rows>0."""
     return q01_pricing_summary(spark, "/root/testdata/sf0.001")
@@ -995,78 +1022,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q_in_subquery": q_in_subquery,
         "q_sessionize": q_sessionize,
     }
-    try:
-        from bq_duckdb_spark.ext import contract as ext_contract
-
-        _merge(q, ext_contract.queries(), "ext_contract")
-    except ImportError:
-        pass
-    try:
-        from bq_duckdb_spark import contract_tier2
-
-        _merge(q, contract_tier2.queries(), "contract_tier2")
-    except ImportError:
-        pass
-    try:
-        from bq_duckdb_spark.ext import contract_pipeline
-
-        _merge(q, contract_pipeline.queries(), "contract_pipeline")
-    except ImportError:
-        pass
-    try:
-        from bq_duckdb_spark.ext import contract_portable
-
-        _merge(q, contract_portable.queries(), "contract_portable")
-    except ImportError:
-        pass
-    try:
-        from bq_duckdb_spark import contract_tier3
-
-        _merge(q, contract_tier3.queries(), "contract_tier3")
-    except ImportError:
-        pass
-    try:
-        from bq_duckdb_spark import contract_tier4
-
-        _merge(q, contract_tier4.queries(), "contract_tier4")
-    except ImportError:
-        pass
-    try:
-        from bq_duckdb_spark import contract_tier5
-
-        _merge(q, contract_tier5.queries(), "contract_tier5")
-    except ImportError:
-        pass
-    try:
-        from bq_duckdb_spark import contract_tpch
-
-        _merge(q, contract_tpch.queries(), "contract_tpch")
-    except ImportError:
-        pass
-    try:
-        from bq_duckdb_spark import contract_tier6
-
-        _merge(q, contract_tier6.queries(), "contract_tier6")
-    except ImportError:
-        pass
-    try:
-        from bq_duckdb_spark import contract_tier7
-
-        _merge(q, contract_tier7.queries(), "contract_tier7")
-    except ImportError:
-        pass
-    try:
-        from bq_duckdb_spark import contract_tier8
-
-        _merge(q, contract_tier8.queries(), "contract_tier8")
-    except ImportError:
-        pass
-    try:
-        from bq_duckdb_spark import contract_tier9
-
-        _merge(q, contract_tier9.queries(), "contract_tier9")
-    except ImportError:
-        pass
+    for name, mod in _contract_modules():
+        _merge(q, mod.queries(), name)
     return q
 
 
@@ -1101,76 +1058,6 @@ def oracle_sql() -> dict[str, str]:
         "q_in_subquery": _Q_IN_SUBQUERY_ORACLE,
         "q_sessionize": _Q_SESSIONIZE_ORACLE,
     }
-    try:
-        from bq_duckdb_spark.ext import contract as ext_contract
-
-        _merge(o, ext_contract.oracle_sql(), "ext_contract")
-    except ImportError:
-        pass
-    try:
-        from bq_duckdb_spark import contract_tier2
-
-        _merge(o, contract_tier2.oracle_sql(), "contract_tier2")
-    except ImportError:
-        pass
-    try:
-        from bq_duckdb_spark.ext import contract_pipeline
-
-        _merge(o, contract_pipeline.oracle_sql(), "contract_pipeline")
-    except ImportError:
-        pass
-    try:
-        from bq_duckdb_spark.ext import contract_portable
-
-        _merge(o, contract_portable.oracle_sql(), "contract_portable")
-    except ImportError:
-        pass
-    try:
-        from bq_duckdb_spark import contract_tier3
-
-        _merge(o, contract_tier3.oracle_sql(), "contract_tier3")
-    except ImportError:
-        pass
-    try:
-        from bq_duckdb_spark import contract_tier4
-
-        _merge(o, contract_tier4.oracle_sql(), "contract_tier4")
-    except ImportError:
-        pass
-    try:
-        from bq_duckdb_spark import contract_tier5
-
-        _merge(o, contract_tier5.oracle_sql(), "contract_tier5")
-    except ImportError:
-        pass
-    try:
-        from bq_duckdb_spark import contract_tpch
-
-        _merge(o, contract_tpch.oracle_sql(), "contract_tpch")
-    except ImportError:
-        pass
-    try:
-        from bq_duckdb_spark import contract_tier6
-
-        _merge(o, contract_tier6.oracle_sql(), "contract_tier6")
-    except ImportError:
-        pass
-    try:
-        from bq_duckdb_spark import contract_tier7
-
-        _merge(o, contract_tier7.oracle_sql(), "contract_tier7")
-    except ImportError:
-        pass
-    try:
-        from bq_duckdb_spark import contract_tier8
-
-        _merge(o, contract_tier8.oracle_sql(), "contract_tier8")
-    except ImportError:
-        pass
-    try:
-        from bq_duckdb_spark import contract_tier9
-
-        _merge(o, contract_tier9.oracle_sql(), "contract_tier9")
-    except ImportError:
-        pass
+    for name, mod in _contract_modules():
+        _merge(o, mod.oracle_sql(), name)
     return o

@@ -707,8 +707,14 @@ class Session:
             df = self.table(name)
             from pyspark.sql import functions as _F
 
+            # a row whose condition is NULL stays: DELETE removes only
+            # rows where it is TRUE (BigQuery, DuckDB)
             kept = (
-                df.filter(~_F.expr(transpile(pred, self._table_mapping())))
+                df.filter(
+                    ~_F.coalesce(
+                        _F.expr(transpile(pred, self._table_mapping())), _F.lit(False)
+                    )
+                )
                 if pred
                 else df.limit(0)
             )
@@ -1210,12 +1216,14 @@ class Session:
     # -- teardown ----------------------------------------------------------
 
     def destroy(self) -> None:
+        """Drop every temp view carrying the session's tag (the table
+        entries' views and the information_schema views alike) and the
+        session's warehouse directory."""
+        prefix = f"{self._tag}__"
         with self._lock:
-            for entry in list(self.tables.values()):
-                try:
-                    self.spark.catalog.dropTempView(entry.view)
-                except Exception:
-                    pass
+            for t in self.spark.catalog.listTables():
+                if t.isTemporary and t.name.startswith(prefix):
+                    self.spark.catalog.dropTempView(t.name)
             self.tables.clear()
             shutil.rmtree(self._warehouse, ignore_errors=True)
 

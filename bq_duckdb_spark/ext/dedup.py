@@ -7,13 +7,14 @@ Scale design:
 - exact dedup = hash-groupBy (one shuffle on the dedup key);
 - near-dup never does an all-pairs join: MinHash banding / SimHash
   chunking bucket the corpus so candidate generation is ONE shuffle on
-  (band, bucket-hash) into per-bucket lists with pairs expanded
-  in-bucket — the hash/signature pipeline runs exactly once, and
-  nothing is persist()ed (cached plans are never dropped by GC, so a
-  long-lived server session would leak executor storage);
-- skewed buckets (e.g. exact duplicates sharing every band) are capped
-  at ``max_bucket`` ids, deterministically — run exact dedup first so
-  identical docs don't form mega-buckets.
+  (band, bucket-hash) through the capped bucket self-join
+  (operators/buckets.py, which owns the exchange pin, the
+  ``max_bucket`` cap and the pair expansion) — the hash/signature
+  pipeline runs exactly once, and nothing is persist()ed (cached plans
+  are never dropped by GC, so a long-lived server session would leak
+  executor storage);
+- run exact dedup first so identical docs don't form mega-buckets that
+  the cap then truncates.
 """
 
 from __future__ import annotations
@@ -26,9 +27,10 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import Window
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, LongType
+
+from bq_duckdb_spark.operators.buckets import bucket_pairs
 
 # ---------------------------------------------------------------------------
 # scan-parallelism widening
@@ -337,15 +339,9 @@ def with_minhash_signature(
     )
 
 
-def _bucket_pairs_expr(arr: str, a_field: str, b_field: str) -> str:
-    """All ordered pairs (x_i, x_j), i < j, from a sorted array — the
-    in-bucket candidate expansion. Output size is the pair count itself,
-    so cost matches what any formulation must emit."""
-    return (
-        f"flatten(transform(sequence(1, size({arr}) - 1), "
-        f"i -> transform(slice({arr}, i + 1, size({arr}) - i), "
-        f"j -> named_struct('{a_field}', element_at({arr}, i), '{b_field}', j))))"
-    )
+def _id_pair(a: str, b: str) -> str:
+    """The ids-only pair expression for :func:`bucket_pairs`."""
+    return f"named_struct('id_a', {a}.id, 'id_b', {b}.id)"
 
 
 def minhash_candidate_pairs(
@@ -362,8 +358,8 @@ def minhash_candidate_pairs(
     band, and emit candidate id-pairs that share any band bucket.
 
     Scale: explode is bands× row inflation; candidates come from ONE
-    shuffle on (band, band_hash) into per-bucket id lists, with pairs
-    expanded inside each bucket — never an all-pairs join, and the
+    shuffle on (band, band_hash) through the capped bucket self-join
+    (:func:`bucket_pairs`) — never an all-pairs join, and the
     signature pipeline (shingle + hash UDF) runs exactly once (a
     self-join formulation computes it once per side: Spark does not
     reuse exchanges across self-join sides here, and persist() leaks
@@ -383,8 +379,8 @@ def minhash_candidate_pairs(
     # explode triggers Catalyst's InferFiltersFromGenerate, which inserts
     # a pre-Generate filter with the generating expression INLINED TWICE
     # (size(expr) > 0 AND isnotnull(expr)) — the whole interpreted
-    # banding/pair expression then evaluates 3x per row (measured 8x
-    # slower on the shingle explode at sf0.1). The arrays here are never
+    # banding expression then evaluates 3x per row (measured 8x slower
+    # on the shingle explode at sf0.1). The arrays here are never
     # empty/null (transform over a literal sequence), so _outer is
     # value-identical.
     # band bucket = chained xxhash64 over the band's SIGNED minima
@@ -404,38 +400,9 @@ def minhash_candidate_pairs(
         id_col,
         F.explode_outer(F.expr(f"array({band_structs})")).alias("bb"),
     ).select(id_col, F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
-    # cap BEFORE collecting: row_number over the same (band, bucket)
-    # key keeps the max_bucket smallest ids, so the collect_list state
-    # is bounded at max_bucket ids per group no matter how degenerate
-    # the bucket — a 10^9-copy duplicate block would otherwise build a
-    # multi-GB array in one aggregation buffer before the old
-    # slice(array_sort(...)) cap ever ran. The window shares the
-    # aggregation's partitioning (one exchange total, verified in
-    # tests/test_plans.py); result is identical (both keep the
-    # max_bucket smallest ids — the window adds only a bounded sort).
-    # pin the (band, bucket) exchange the window/aggregation needs:
-    # repartition(n, keys) replaces the ENSURE_REQUIREMENTS exchange and
-    # REPARTITION_BY_NUM is exempt from AQE byte-based coalescing, which
-    # otherwise serialized the compute-dense cap + collect + in-bucket
-    # pair-expansion tail onto ONE task (stage_profile, round 11 — the
-    # same coalescing pattern round 10 fixed in setjoin/fuzzy). n stays
-    # scale-adaptive via defaultParallelism.
-    n_parts = banded.sparkSession.sparkContext.defaultParallelism
-    banded = banded.repartition(n_parts, "band", "bucket")
-    w = Window.partitionBy("band", "bucket").orderBy(id_col)
-    bucketed = (
-        banded.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= max_bucket)
-        .groupBy("band", "bucket")
-        .agg(F.array_sort(F.collect_list(id_col)).alias("ids"))
-        .filter(F.size("ids") > 1)
-    )
-    # _outer: the quadratic pair array must not be re-evaluated in an
-    # inferred filter (see banding comment); size("ids") > 1 above
-    # guarantees non-emptiness
-    pairs = bucketed.select(
-        F.explode_outer(F.expr(_bucket_pairs_expr("ids", "id_a", "id_b"))).alias("p")
-    ).select("p.id_a", "p.id_b")
+    pairs = bucket_pairs(
+        banded, ["band", "bucket"], id_col, max_bucket, _id_pair
+    ).select("id_a", "id_b")
     return pairs.distinct() if dedup else pairs
 
 
@@ -556,29 +523,16 @@ def _ngram_jaccard_carry(
             F.expr(f"array({band_structs})")
         ).alias("bb"),
     ).select(id_col, "sh", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
-    bucketed = (
-        banded.groupBy("band", "bucket")
-        .agg(
-            F.slice(
-                F.array_sort(
-                    F.collect_list(F.struct(F.col(id_col).alias("id"), F.col("sh")))
-                ),
-                1,
-                max_bucket,
-            ).alias("xs")
+
+    def pair(a: str, b: str) -> str:
+        return (
+            f"named_struct('id_a', {a}.id, 'id_b', {b}.id, 'jaccard', "
+            f"size(array_intersect({a}.sh, {b}.sh)) / size(array_union({a}.sh, {b}.sh)))"
         )
-        .filter(F.size("xs") > 1)
-    )
-    pair = (
-        "flatten(transform(sequence(1, size(xs) - 1), "
-        "i -> transform(slice(xs, i + 1, size(xs) - i), "
-        "y -> named_struct('id_a', element_at(xs, i).id, 'id_b', y.id, "
-        "'jaccard', size(array_intersect(element_at(xs, i).sh, y.sh)) "
-        "/ size(array_union(element_at(xs, i).sh, y.sh))))))"
-    )
+
     return (
-        bucketed.select(F.explode_outer(F.expr(pair)).alias("p"))
-        .select("p.id_a", "p.id_b", "p.jaccard")
+        bucket_pairs(banded, ["band", "bucket"], id_col, max_bucket, pair)
+        .select("id_a", "id_b", "jaccard")
         .filter(F.col("jaccard") >= threshold)
         .groupBy("id_a", "id_b")
         .agg(F.first("jaccard").alias("jaccard"))
@@ -843,10 +797,11 @@ def blocked_pairs_from_fp(
     precomputed ``simhash`` column — the banding core both SimHash paths
     share.
 
-    ONE shuffle on (band, key) into per-bucket sorted (id, simhash)
-    lists, pairs expanded in-bucket, verified with bit_count(xor); never
-    an all-pairs join, nothing persisted, ``max_bucket`` caps
-    pathological buckets deterministically (smallest ids kept).
+    ONE shuffle on (band, key) through the capped bucket self-join
+    (:func:`bucket_pairs`) over (id, simhash) items, verified with
+    bit_count(xor); never an all-pairs join, nothing persisted,
+    ``max_bucket`` caps pathological buckets deterministically
+    (smallest ids kept).
 
     ``emit="first_band"``: a pair co-bucketed in several bands is emitted
     ONLY from its first fully-clean band (decided in-bucket from the xor
@@ -875,47 +830,26 @@ def blocked_pairs_from_fp(
         id_col, "simhash",
         F.col("bb.band").alias("band"), F.col("bb.key").alias("key"),
     )
-    # pin the (band, key) exchange (see minhash_candidate_pairs): keeps
-    # the in-bucket pair expansion + xor verify off a single
-    # AQE-coalesced task
-    n_parts = banded.sparkSession.sparkContext.defaultParallelism
-    banded = banded.repartition(n_parts, "band", "key")
-    bucketed = (
-        banded.groupBy("band", "key")
-        .agg(
-            F.slice(
-                F.array_sort(
-                    F.collect_list(F.struct(F.col(id_col).alias("id"), F.col("simhash")))
-                ),
-                1,
-                max_bucket,
-            ).alias("xs")
-        )
-        .filter(F.size("xs") > 1)
-    )
-    pair = (
-        "flatten(transform(sequence(1, size(xs) - 1), "
-        "i -> transform(slice(xs, i + 1, size(xs) - i), "
-        "y -> named_struct('id_a', element_at(xs, i).id, 'id_b', y.id, "
-        "'x', element_at(xs, i).simhash ^ y.simhash))))"
-    )
-    out = bucketed.select(
-        "band", F.explode_outer(F.expr(pair)).alias("p")
-    ).filter(F.expr("bit_count(p.x)") <= max_hamming)
+    out = bucket_pairs(
+        banded, ["band", "key"], id_col, max_bucket,
+        lambda a, b: (
+            f"named_struct('id_a', {a}.id, 'id_b', {b}.id, 'x', {a}.simhash ^ {b}.simhash)"
+        ),
+    ).filter(F.expr("bit_count(x)") <= max_hamming)
     if emit == "first_band":
         # F.element_at over a literal array for the same parser reason as
         # band_structs above (the bitmap expression contains >>)
         lookup = first_band_lookup(combos, n_blocks)
-        bm = clean_bitmap_expr("p.x", layout)
+        bm = clean_bitmap_expr("x", layout)
         out = out.filter(
             F.col("band")
             == F.element_at(
                 F.array(*[F.lit(v) for v in lookup]), F.expr(bm).cast("int") + 1
             )
         )
-        return out.select("p.id_a", "p.id_b", F.expr("bit_count(p.x)").alias("hamming"))
+        return out.select("id_a", "id_b", F.expr("bit_count(x)").alias("hamming"))
     return (
-        out.select("p.id_a", "p.id_b", F.expr("bit_count(p.x)").alias("hamming"))
+        out.select("id_a", "id_b", F.expr("bit_count(x)").alias("hamming"))
         .distinct()
     )
 

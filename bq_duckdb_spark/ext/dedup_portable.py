@@ -9,7 +9,8 @@ These twins swap ONLY the hash family: a char-polynomial
 ``(a*h + b) mod P`` — plain 64-bit integer arithmetic every engine
 evaluates identically (products stay < 2^62). Banding, bucketing,
 pair expansion, and verification semantics are IDENTICAL to the
-production operators, which is exactly what the oracles then prove.
+production operators (both bucket through operators/buckets.py), which
+is exactly what the oracles then prove.
 
 Use the xxhash64 operators in production (stronger hashes, codegen'd);
 use these when cross-engine reproducibility of the candidate set is the
@@ -22,11 +23,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from bq_duckdb_spark.ext.dedup import (
-    _bucket_pairs_expr,
+    _id_pair,
     _minhash_coeffs,
     blocked_pairs_from_fp,
     widen_small_scan,
 )
+from bq_duckdb_spark.operators.buckets import bucket_pairs
 
 P = 2147483647  # Mersenne prime 2^31 - 1
 
@@ -165,8 +167,8 @@ def portable_minhash_pairs(
     max_bucket: int = 1000,
 ) -> DataFrame:
     """MinHash+LSH banding candidates, portable-hash family. Same scale
-    shape as dedup.minhash_candidate_pairs: ONE shuffle on (band,
-    bucket), in-bucket pair expansion, ``max_bucket`` cap, distinct."""
+    shape as dedup.minhash_candidate_pairs: the capped bucket self-join
+    on (band, bucket) (operators/buckets.py), then distinct."""
     sh = _with_poly_shingle_hashes(widen_small_scan(df), text_col, shingle_k, "__sh")
     return _minhash_pairs_from_shingles(
         sh, id_col, num_hashes, bands, max_bucket, sh_col="__sh"
@@ -198,20 +200,9 @@ def _minhash_pairs_from_shingles(
         # ext/dedup.py banding comment)
         id_col, F.explode_outer(F.expr(f"array({buckets})")).alias("bb")
     ).select(id_col, "bb.band", "bb.bucket")
-    # pin the (band, bucket) exchange (see dedup.minhash_candidate_pairs):
-    # keeps the in-bucket pair expansion off a single AQE-coalesced task
-    n_parts = banded.sparkSession.sparkContext.defaultParallelism
-    banded = banded.repartition(n_parts, "band", "bucket")
-    bucketed = (
-        banded.groupBy("band", "bucket")
-        .agg(F.slice(F.array_sort(F.collect_list(id_col)), 1, max_bucket).alias("ids"))
-        .filter(F.size("ids") > 1)
-    )
     return (
-        bucketed.select(
-            F.explode_outer(F.expr(_bucket_pairs_expr("ids", "id_a", "id_b"))).alias("p")
-        )
-        .select("p.id_a", "p.id_b")
+        bucket_pairs(banded, ["band", "bucket"], id_col, max_bucket, _id_pair)
+        .select("id_a", "id_b")
         .distinct()
     )
 

@@ -15,15 +15,14 @@ Scale design (mirrors the MinHash banding path in ext/dedup.py):
 - variant generation is map-only whole-stage-codegen (``transform`` over
   a ``sequence``), |s|+1 rows per string — linear in corpus bytes, no
   Python anywhere;
-- candidates come from ONE shuffle on ``xxhash64(variant)`` into
-  per-variant id lists with pairs expanded in-bucket — never an
-  all-pairs join, never a cartesian (a 64-bit hash collision between
-  different variants can only ADD candidates, which the exact verify
-  then rejects);
-- pathological variants (huge exact-duplicate groups: every copy shares
-  every variant) are deterministically capped at ``max_bucket`` ids —
-  run exact dedup first, as with MinHash, so identical strings don't
-  form quadratic buckets;
+- candidates come from ONE shuffle on ``xxhash64(variant)`` through
+  the capped bucket self-join (operators/buckets.py: exchange pin,
+  ``max_bucket`` cap, in-bucket pair expansion) — never an all-pairs
+  join, never a cartesian (a 64-bit hash collision between different
+  variants can only ADD candidates, which the exact verify then
+  rejects); run exact dedup first, as with MinHash, so huge
+  exact-duplicate groups (every copy shares every variant) don't fill
+  buckets up to the cap;
 - verification cost is one ``levenshtein`` per distinct candidate pair.
 
 Reference parity: the reference engine (alexchoi0/bq-duckdb) exposes no
@@ -36,7 +35,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from bq_duckdb_spark.ext.dedup import _bucket_pairs_expr, widen_small_scan
+from bq_duckdb_spark.ext.dedup import widen_small_scan
+from bq_duckdb_spark.operators.buckets import bucket_pairs
 
 
 def deletion_variants_expr(col: str) -> str:
@@ -79,41 +79,15 @@ def fuzzy_pairs_d1(
         "fz_s",
         F.explode_outer(F.expr(deletion_variants_expr("fz_s"))).alias("fz_v"),
     ).select(F.xxhash64("fz_v").alias("vh"), "fz_id", "fz_s")
-    # Pin the bucket exchange's parallelism (round-10 stage profile:
-    # AQE coalesced it to 4 tasks on byte size, serializing the
-    # compute-dense in-bucket pair expansion + levenshtein verify that
-    # pipeline on top of it). repartition(n, vh) is the partitioning the
-    # groupBy requires, so it replaces the ENSURE_REQUIREMENTS exchange;
-    # nothing is lost map-side because collect_list partials do not
-    # shrink data anyway. REPARTITION_BY_NUM is exempt from AQE
-    # coalescing; default n = cluster parallelism.
-    npart = df.sparkSession.sparkContext.defaultParallelism
-    bucketed = (
-        variants.repartition(npart, "vh")
-        .groupBy("vh")
-        .agg(
-            F.slice(
-                F.array_sort(
-                    F.collect_list(
-                        F.struct(F.col("fz_id").alias("id"), F.col("fz_s").alias("s"))
-                    )
-                ),
-                1,
-                max_bucket,
-            ).alias("xs")
-        )
-        .filter(F.size("xs") > 1)
-    )
     pairs = (
-        bucketed.select(
-            F.explode_outer(F.expr(_bucket_pairs_expr("xs", "a", "b"))).alias("p")
+        bucket_pairs(
+            variants, ["vh"], "fz_id", max_bucket,
+            lambda a, b: (
+                f"named_struct('id_a', {a}.id, 's_a', {a}.fz_s, "
+                f"'id_b', {b}.id, 's_b', {b}.fz_s)"
+            ),
         )
-        .select(
-            F.col("p.a.id").alias("id_a"),
-            F.col("p.a.s").alias("s_a"),
-            F.col("p.b.id").alias("id_b"),
-            F.col("p.b.s").alias("s_b"),
-        )
+        .select("id_a", "s_a", "id_b", "s_b")
         # a pair sharing several variants (always ≥1, often 2-3) is
         # emitted once per shared variant: dedup on the pair key before
         # paying the levenshtein verify

@@ -183,11 +183,11 @@ def cooccurrence_edges(
     """Undirected co-occurrence edges ``(u, v)``, ``u < v``: items that
     appear in the same group (parts in the same order, terms in the
     same doc). ONE shuffle on the group key with in-group pair
-    expansion (the dedup bucket machinery) — never a self-join that
-    shuffles the item table twice. ``max_group`` caps pathological
-    groups the same way the LSH buckets are capped (pairs grow
+    expansion (operators/buckets.py's pair expression) — never a
+    self-join that shuffles the item table twice. ``max_group`` caps
+    pathological groups at their smallest distinct items (pairs grow
     quadratically in group size)."""
-    from bq_duckdb_spark.ext.dedup import _bucket_pairs_expr
+    from bq_duckdb_spark.operators.buckets import pairs_expr
 
     grouped = (
         df.select(F.col(group_col).alias("g"), F.col(item_col).alias("i"))
@@ -197,7 +197,9 @@ def cooccurrence_edges(
     )
     return (
         grouped.select(
-            F.explode_outer(F.expr(_bucket_pairs_expr("xs", "u", "v"))).alias("p")
+            F.explode_outer(
+                F.expr(pairs_expr("xs", lambda a, b: f"named_struct('u', {a}, 'v', {b})"))
+            ).alias("p")
         )
         .select("p.u", "p.v")
         .distinct()

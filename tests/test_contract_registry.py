@@ -9,32 +9,8 @@ import __spark_entry__ as entry
 
 
 def _modules():
-    from bq_duckdb_spark import (
-        contract_tier2,
-        contract_tier3,
-        contract_tier4,
-        contract_tier5,
-        contract_tier6,
-        contract_tier7,
-        contract_tier8,
-        contract_tpch,
-    )
-    from bq_duckdb_spark.ext import contract as ext_contract
-    from bq_duckdb_spark.ext import contract_pipeline, contract_portable
-
-    return {
-        "ext": ext_contract,
-        "tier2": contract_tier2,
-        "pipeline": contract_pipeline,
-        "portable": contract_portable,
-        "tier3": contract_tier3,
-        "tier4": contract_tier4,
-        "tier5": contract_tier5,
-        "tier6": contract_tier6,
-        "tier7": contract_tier7,
-        "tier8": contract_tier8,
-        "tpch": contract_tpch,
-    }
+    """The contract modules exactly as queries()/oracle_sql() walk them."""
+    return dict(entry._contract_modules())
 
 
 def test_no_cross_module_key_collisions():

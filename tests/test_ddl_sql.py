@@ -117,6 +117,15 @@ def test_delete_where(session):
     assert rows(session.query("SELECT v FROM t ORDER BY v")) == [(1,), (3,)]
 
 
+def test_delete_keeps_rows_whose_condition_is_null(session):
+    """DELETE removes only rows whose condition is TRUE: a NULL
+    comparison keeps the row, as in BigQuery and DuckDB."""
+    session.query("CREATE TABLE t (k INT64, v INT64)")
+    session.query("INSERT INTO t VALUES (1, 1), (2, 5), (3, NULL)")
+    session.query("DELETE FROM t WHERE v > 2")
+    assert rows(session.query("SELECT k, v FROM t ORDER BY k")) == [(1, 1), (3, None)]
+
+
 def test_delete_all(session):
     session.query("CREATE TABLE t (v INT64)")
     session.query("INSERT INTO t VALUES (1)")

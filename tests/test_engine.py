@@ -38,6 +38,26 @@ def test_destroy_session_drops_everything(manager):
         manager.get_session(sid)
 
 
+def test_destroy_drops_every_session_view(spark, manager):
+    """destroy leaves no temp view carrying the session's tag, including
+    the information_schema views a query registers."""
+    sid = manager.create_session()
+    s = manager.get_session(sid)
+    s.create_table("t", [{"name": "id", "type": "INT64"}])
+    s.query("SELECT table_name FROM information_schema.tables").collect()
+    prefix = f"{s._tag}__"
+
+    def tagged():
+        return [
+            t.name for t in spark.catalog.listTables()
+            if t.isTemporary and t.name.startswith(prefix)
+        ]
+
+    assert len(tagged()) == 3
+    manager.destroy_session(sid)
+    assert tagged() == []
+
+
 def test_insert_dict_and_list_rows(session):
     session.create_table(
         "t", [{"name": "id", "type": "INT64"}, {"name": "name", "type": "STRING"}]

@@ -3,9 +3,12 @@ the parquet scans, schemas are pruned, small dims broadcast, theta joins
 use nested-loop, scans-only pipelines have zero exchanges. These pin the
 properties that make the same code viable at 100 TB."""
 
+import re
+
 import pytest
 
 import __spark_entry__ as entry
+from bq_duckdb_spark.ext import dedup, dedup_portable, fuzzy
 from bq_duckdb_spark.plans import audit_plan
 
 SF = "/root/testdata/sf0.001"
@@ -164,29 +167,81 @@ def test_unpartitioned_window_list_is_closed():
     assert audit_unpartitioned_windows("/root/repo") == []
 
 
-def test_minhash_bucket_cap_prunes_map_side(q, spark):
-    """The max_bucket cap must run as a rank-limit window that (a)
-    shares the bucket aggregation's (band, bucket) exchange — no extra
-    shuffle — and (b) compiles to WindowGroupLimit on BOTH sides of
-    that exchange, so a degenerate bucket (e.g. a giant exact-duplicate
-    block) is pruned to max_bucket rows per map partition BEFORE it
-    ships. Without the map-side limit, a 10^9-copy block floods the
-    shuffle and the collect_list buffer no matter what the cap does
-    afterwards."""
-    from bq_duckdb_spark.ext.dedup import minhash_candidate_pairs
+def _docs(spark):
+    return spark.read.parquet(f"{SF}/documents.parquet").select("doc_id", "text")
 
-    docs = spark.read.parquet(f"{SF}/documents.parquet").select(
-        "doc_id", "text"
-    )
-    a = audit_plan(
-        minhash_candidate_pairs(docs, "text", "doc_id", dedup=False)
-    )
-    # widen repartition + ONE (band,bucket) exchange feeding both the
-    # window and the bucket aggregation (the audit counts each node
-    # twice: tree line + detail header, like the other pins here)
-    assert a.exchanges <= 4, f"window must share the agg shuffle\n{a.formatted}"
+
+# The five capped bucket self-joins: build(spark), bucket keys, and the
+# most exchange refs the plan may hold — each plan's count before the
+# cap window existed, so the window must share the bucket aggregation's
+# exchange (the audit counts each node twice: tree line + detail header).
+BUCKET_CALLERS = [
+    pytest.param(
+        lambda sp: dedup.minhash_candidate_pairs(_docs(sp), "text", "doc_id", dedup=False),
+        ("band", "bucket"), 4, id="minhash",
+    ),
+    pytest.param(
+        lambda sp: dedup.ngram_jaccard_pairs(
+            _docs(sp), "text", "doc_id", carry_shingles=True
+        ),
+        ("band", "bucket"), 6, id="jaccard_carry",
+    ),
+    pytest.param(
+        lambda sp: dedup.simhash_near_dup_pairs(_docs(sp), "text", "doc_id"),
+        ("band", "key"), 4, id="simhash_blocked",
+    ),
+    pytest.param(
+        lambda sp: fuzzy.fuzzy_pairs_d1(
+            sp.read.parquet(f"{SF}/customer.parquet"), "c_name", "c_custkey"
+        ),
+        ("vh",), 6, id="fuzzy_d1",
+    ),
+    pytest.param(
+        lambda sp: dedup_portable.portable_minhash_pairs(_docs(sp), "text", "doc_id"),
+        ("band", "bucket"), 6, id="minhash_portable",
+    ),
+]
+
+
+@pytest.mark.parametrize("build, keys, max_exchanges", BUCKET_CALLERS)
+def test_bucket_cap_limits_before_collect(spark, build, keys, max_exchanges):
+    """Every capped bucket self-join caps with a rank limit that (a)
+    shares the bucket aggregation's exchange — no extra shuffle — and
+    (b) compiles to a WindowGroupLimit between that exchange and the
+    collect_list, so the aggregation buffer never holds more than
+    max_bucket items of a degenerate bucket (e.g. a giant
+    exact-duplicate block).
+
+    The limit runs after the exchange only: the exchange pin
+    (operators/buckets.py) replaces the ENSURE_REQUIREMENTS exchange
+    below which Spark would add a map-side Partial limit, so a
+    degenerate bucket still ships whole before it is pruned."""
+    a = audit_plan(build(spark))
+    assert a.exchanges <= max_exchanges, f"window must share the agg shuffle\n{a.formatted}"
     assert a.formatted.count("WindowGroupLimit") >= 2, (
-        f"rank-limit must prune on the map side\n{a.formatted}"
+        f"rank-limit must cap the bucket\n{a.formatted}"
+    )
+    # one exchange on exactly the bucket keys
+    part = r"hashpartitioning\(" + ", ".join(rf"{k}#\d+L?" for k in keys) + r", \d+\)"
+    ids = re.findall(
+        r"^\((\d+)\) Exchange\s*\nInput.*\nArguments: " + part,
+        a.formatted, re.MULTILINE,
+    )
+    assert len(ids) == 1, f"one bucket exchange on {keys}\n{a.formatted}"
+    # walking the tree up from that exchange, a rank limit comes before
+    # the first collect_list aggregate
+    aggs = set(re.findall(
+        r"^\((\d+)\) ObjectHashAggregate\s*\n(?:(?!\n\().)*collect_list",
+        a.formatted, re.MULTILINE | re.DOTALL,
+    ))
+    tree = a.formatted.split("\n\n", 1)[0].splitlines()
+    node = [re.search(r"(\w+) \((\d+)\)$", ln) for ln in tree]
+    e = next(i for i, m in enumerate(node) if m and m.group(2) == ids[0])
+    agg = max(i for i, m in enumerate(node[:e]) if m and m.group(2) in aggs)
+    between = [m.group(1) for m in node[agg + 1:e] if m]
+    assert "WindowGroupLimit" in between, (
+        f"no rank limit between the bucket exchange and collect_list: "
+        f"{between}\n{a.formatted}"
     )
 
 
