@@ -261,24 +261,32 @@ def _unnest_from(sql: str) -> str:
     return sql
 
 
-_ARRAY_LITERAL_RE = re.compile(r"(?<![\w)\]'\"`])\[")
+_ARRAY_LITERAL_RE = re.compile(
+    r"(?<![\w)\]'\"`])(?:\bARRAY\s*(<[\w\s<>,]*>)?\s*)?\[", re.IGNORECASE
+)
 
 
 def _bracket_literals(sql: str) -> str:
-    """BigQuery array literal ``[1, 2, 3]`` → ``array(1, 2, 3)``.
+    """BigQuery array literals ``[1, 2]`` and ``ARRAY[1, 2]`` →
+    ``array(1, 2)``; the typed ``ARRAY<INT64>[1, 2]`` →
+    ``CAST(array(1, 2) AS ARRAY<BIGINT>)``.
 
     A ``[`` directly following an identifier/``)``/``]``/literal is
     subscript indexing and is left alone.
     """
     i = 0
     while m := _search_code(_ARRAY_LITERAL_RE, sql, i):
-        i = m.start()
+        i, lb = m.start(), m.end() - 1
         try:
-            j = _find_matching_paren(sql, i)
+            j = _find_matching_paren(sql, lb)
         except ValueError:  # unclosed: the literal runs to the end
             j = len(sql)
-        sql = f"{sql[:i]}array({sql[i + 1 : j]}){sql[j + 1 :]}"
-        i += len("array(")
+        lit = f"array({sql[lb + 1 : j]})"
+        if m.group(1):
+            typ = re.sub(r"\w+", lambda w: _TYPE_RENAMES.get(w[0].upper(), w[0]), m[1])
+            lit = f"CAST({lit} AS ARRAY{typ})"
+        sql = f"{sql[:i]}{lit}{sql[j + 1 :]}"
+        i += lit.index("array(") + len("array(")
     return sql
 
 

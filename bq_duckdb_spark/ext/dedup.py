@@ -8,8 +8,9 @@ Scale design:
 - near-dup never does an all-pairs join: MinHash banding / SimHash
   chunking bucket the corpus so candidate generation is ONE shuffle on
   (band, bucket-hash) through the capped bucket self-join
-  (operators/buckets.py, which owns the exchange pin, the
-  ``max_bucket`` cap and the pair expansion) — the hash/signature
+  (operators/buckets.py, which owns the ``max_bucket`` cap and the
+  pair expansion; its shuffle is sized by get_spark's partitioning
+  policy) — the hash/signature
   pipeline runs exactly once, and nothing is persist()ed (cached plans
   are never dropped by GC, so a long-lived server session would leak
   executor storage);

@@ -16,8 +16,8 @@ Scale design (mirrors the MinHash banding path in ext/dedup.py):
   a ``sequence``), |s|+1 rows per string — linear in corpus bytes, no
   Python anywhere;
 - candidates come from ONE shuffle on ``xxhash64(variant)`` through
-  the capped bucket self-join (operators/buckets.py: exchange pin,
-  ``max_bucket`` cap, in-bucket pair expansion) — never an all-pairs
+  the capped bucket self-join (operators/buckets.py: ``max_bucket``
+  cap, in-bucket pair expansion) — never an all-pairs
   join, never a cartesian (a 64-bit hash collision between different
   variants can only ADD candidates, which the exact verify then
   rejects); run exact dedup first, as with MinHash, so huge

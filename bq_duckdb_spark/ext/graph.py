@@ -248,17 +248,9 @@ def triangle_count(edges: DataFrame) -> DataFrame:
         .otherwise(F.struct(F.col("deg_u").alias("d"), F.col("u").alias("n")))
         .alias("hi"),
     )
-    # Pin the wedge stage's parallelism (round-10 stage profile: the
-    # wedge-generating join carried 50 s of executor time on 10
-    # AQE-coalesced tasks — oriented edges are few BYTES, so byte-based
-    # coalescing serializes a stage whose per-row cost is the wedge
-    # FAN-OUT, guide §2.5's "bytes are a bad proxy" skew cousin). The
-    # hash repartition on ``lo`` is the same partitioning the wedge
-    # self-join requires, so this replaces its ENSURE_REQUIREMENTS
-    # exchange rather than adding one; REPARTITION_BY_NUM is exempt
-    # from AQE coalescing; n = cluster parallelism.
-    npart = edges.sparkSession.sparkContext.defaultParallelism
-    oriented = oriented.repartition(npart, "lo")
+    # the wedge self-join's exchange on ``lo`` is sized by get_spark's
+    # partitioning policy: its per-row cost is the wedge fan-out, which
+    # bytes do not show
     a = oriented.select(F.col("lo"), F.col("hi").alias("h1"))
     b = oriented.select(F.col("lo"), F.col("hi").alias("h2"))
     wedges = (

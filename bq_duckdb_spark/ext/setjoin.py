@@ -78,20 +78,10 @@ def exact_jaccard_join(
     freq = ex.groupBy("s").agg(F.count(F.lit(1)).alias("df"))
     byrarity = Window.partitionBy("doc").orderBy("df", "s")
     perdoc = Window.partitionBy("doc")
-    # Pin the per-doc window exchange's parallelism (round-10 stage
-    # profile: AQE coalesced it to ONE task — the shingled corpus is few
-    # MB at small SF — and, because everything downstream of it
-    # (rarity-ranking windows, the candidate join with the broadcast
-    # prefix side, the pair distinct, the exact verify) pipelines on
-    # this same hash(doc) partitioning with no further exchange, the
-    # whole compute-dense tail of the operator serialized with it).
-    # ``repartition(n, doc)`` is the partitioning the windows REQUIRE,
-    # so this replaces the ENSURE_REQUIREMENTS exchange rather than
-    # adding one, and REPARTITION_BY_NUM is exempt from AQE coalescing.
-    npart = df.sparkSession.sparkContext.defaultParallelism
+    # the per-doc windows and everything downstream of them pipeline on
+    # one hash(doc) exchange, sized by get_spark's partitioning policy
     ranked = (
         ex.join(freq, "s")
-        .repartition(npart, "doc")
         .withColumn("sz", F.count(F.lit(1)).over(perdoc))
         .withColumn("rk", F.row_number().over(byrarity))
     )

@@ -8,7 +8,8 @@ re-expressed as compositions of DataFrame ops (never driver-side loops):
 - ``prefix``     — exact global rank / running total (range partition +
                    broadcast per-slice offsets), shared by ntile, ids,
                    budget, percentile and pipeline.seeded_shuffle.
-- ``buckets``    — capped bucket self-join (exchange pin, rank-limit cap
+- ``buckets``    — capped bucket self-join (one hash exchange sized by
+                   get_spark's partitioning policy, rank-limit cap
                    before collect_list, in-bucket pair expansion), shared
                    by the MinHash, SimHash, carry-shingles Jaccard,
                    portable MinHash and fuzzy edit-distance joins.

@@ -5,20 +5,12 @@ and SimHash banding, ``ext/dedup_portable.py`` MinHash banding,
 
 Rows are grouped on a bucket key, each bucket keeps its ``max_bucket``
 smallest ids, and every in-bucket pair is expanded. That is ONE shuffle
-on the key, never an all-pairs join. The primitive owns the three
-decisions those operators share:
+on the key, never an all-pairs join: a plain hash exchange sized by the
+session's one partitioning policy (``get_spark``), with a map-side
+``WindowGroupLimit … Partial`` below it, so a degenerate bucket is
+pruned before it ships. The primitive owns the two decisions those
+operators share:
 
-- **The pin.** ``repartition(defaultParallelism, *keys)`` is the
-  partitioning the cap window and the aggregation require, so it
-  replaces their ENSURE_REQUIREMENTS exchange. REPARTITION_BY_NUM is
-  exempt from AQE's byte-based coalescing, which otherwise put the
-  compute-dense cap + collect + pair-expansion tail onto ONE task
-  (stage profiles, rounds 10 and 11). The price: the rank limit then
-  runs only after the exchange (``WindowGroupLimit … Final``), so a
-  degenerate bucket ships whole before it is pruned. Without the pin
-  Spark adds a map-side ``Partial`` limit below the exchange. The
-  choice between the two is ROADMAP item 9's, and this is the one
-  place to make it.
 - **The cap.** ``row_number() <= max_bucket`` over the same key, ordered
   by id, runs BEFORE ``collect_list``, so the aggregation buffer holds at
   most ``max_bucket`` items however degenerate the bucket (a 10^9-copy
@@ -73,15 +65,13 @@ def bucket_pairs(
     ``a`` and ``b`` are structs of ``id`` (``id_col``) and every other
     non-key column of ``df``, so ``df`` should carry only the keys, the
     id and the payload the pair expression reads. Each bucket keeps its
-    ``max_bucket`` smallest ids (see the module docstring for the pin,
-    the cap and the expansion)."""
+    ``max_bucket`` smallest ids (see the module docstring for the cap
+    and the expansion)."""
     payload = [c for c in df.columns if c != id_col and c not in keys]
-    n_parts = df.sparkSession.sparkContext.defaultParallelism
     w = Window.partitionBy(*keys).orderBy(id_col)
     item = F.struct(F.col(id_col).alias("id"), *payload)
     return (
-        df.repartition(n_parts, *keys)
-        .withColumn("__rn", F.row_number().over(w))
+        df.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") <= max_bucket)
         .groupBy(*keys)
         .agg(F.array_sort(F.collect_list(item)).alias("xs"))

@@ -19,13 +19,19 @@ _PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 def get_spark(
     app_name: str = "bq-duckdb-spark",
     cpus: str | int | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with the engine's standard config.
 
     - AQE on: runtime shuffle-partition coalescing + skew-join splitting,
       which is what keeps the same plan viable from sf0.001 to 100 TB.
+    - One partitioning policy: every shuffle plans ``shuffle.partitions``
+      reducers (the core count, at least 4), and AQE's coalescing floor
+      ``minPartitionSize`` is 1 byte, not 1 MB. At 1 MB a few-KB but
+      compute-dense shuffle (the wedge join, the per-doc set-similarity
+      windows, the capped bucket self-join) packed onto ONE task; now it
+      keeps about one task per core, and no operator pins a
+      ``repartition``.
     - UTC session timezone: matches DuckDB / BigQuery timestamp semantics
       so date extraction agrees with the correctness oracle.
     - Arrow enabled: vectorized Pandas-UDF path for the ext/ operators.
@@ -33,11 +39,10 @@ def get_spark(
       task) with this package importable.
     """
     cpus = cpus if cpus is not None else os.environ.get("SPARK_GRAFT_CPUS", "*")
-    if shuffle_partitions is None:
-        try:
-            shuffle_partitions = max(int(str(cpus)), 4)
-        except ValueError:
-            shuffle_partitions = 32
+    try:
+        shuffle_partitions = max(int(str(cpus)), 4)
+    except ValueError:
+        shuffle_partitions = 32
 
     builder = (
         SparkSession.builder.appName(app_name)
@@ -45,6 +50,7 @@ def get_spark(
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
+        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "1")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

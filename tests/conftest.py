@@ -6,7 +6,7 @@ from bq_duckdb_spark.engine import Session, SessionManager
 
 @pytest.fixture(scope="session")
 def spark():
-    return get_spark(app_name="bq-duckdb-spark-tests", cpus=4, shuffle_partitions=4)
+    return get_spark(app_name="bq-duckdb-spark-tests", cpus=4)
 
 
 @pytest.fixture(scope="session")

@@ -672,6 +672,8 @@ _REWRITTEN_SNIPPETS = [_call_snippet(name) for name in _CALLS] + [
     "1 FROM UNNEST(a)",
     "{'k': v}",
     "[1, 2]",
+    "ARRAY[1, 2]",
+    "ARRAY<INT64>[1, 2]",
     "arr[OFFSET(0)]",
     "arr[SAFE_OFFSET(0)]",
     "1 FROM t QUALIFY rn = 1",
@@ -705,3 +707,42 @@ def test_rewrites_leave_literals_alone(snippet, q):
 )
 def test_calls_beside_other_quote_rewritten(bq, spark):
     assert transpile(bq) == spark
+
+
+@pytest.mark.parametrize(
+    "bq, spark",
+    [
+        ("SELECT ARRAY[1, 2] AS a", "SELECT array(1, 2) AS a"),
+        ("SELECT array [1, 2][0] AS a", "SELECT array(1, 2)[0] AS a"),
+        ("SELECT ARRAY<INT64>[1, 2] AS a", "SELECT CAST(array(1, 2) AS ARRAY<BIGINT>) AS a"),
+        ("SELECT ARRAY<STRING>[] AS a", "SELECT CAST(array() AS ARRAY<STRING>) AS a"),
+        (
+            "SELECT ARRAY<INT64>[3] AS b, ARRAY<BOOL>[] AS e",
+            "SELECT CAST(array(3) AS ARRAY<BIGINT>) AS b, CAST(array() AS ARRAY<BOOLEAN>) AS e",
+        ),
+        (
+            "SELECT ARRAY<STRUCT<x INT64, y FLOAT64>>[STRUCT(1, 2.0)] AS a",
+            "SELECT CAST(array(STRUCT(1, 2.0)) AS ARRAY<STRUCT<x BIGINT, y DOUBLE>>) AS a",
+        ),
+        ("SELECT [ARRAY[1]] AS a, arr[0] FROM t", "SELECT array(array(1)) AS a, arr[0] FROM t"),
+    ],
+)
+def test_array_keyword_literals(bq, spark):
+    assert transpile(bq) == spark
+
+
+def test_array_keyword_literals_match_duckdb(session):
+    import duckdb
+
+    df = session.query(
+        "SELECT ARRAY[1, 2] AS a, ARRAY<INT64>[3, 4] AS b, ARRAY<STRING>[] AS e, "
+        "ARRAY_LENGTH(ARRAY<FLOAT64>[1.5, 2]) AS n"
+    )
+    want = duckdb.sql(
+        "SELECT [1, 2] AS a, [3, 4]::BIGINT[] AS b, []::VARCHAR[] AS e, "
+        "len([1.5, 2]::DOUBLE[]) AS n"
+    ).fetchall()
+    assert [tuple(r) for r in df.collect()] == want
+    assert [f.dataType.simpleString() for f in df.schema.fields] == [
+        "array<int>", "array<bigint>", "array<string>", "int",
+    ]

@@ -8,12 +8,13 @@ the hostile-value classes the sweep exists to exercise.
 """
 
 import hashlib
+import os
 import sys
 
 import duckdb
 import pytest
 
-sys.path.insert(0, "/root/repo/tools")
+sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
 
 from gen_fuzz import TABLES_REF, gen_corpus  # noqa: E402
 

@@ -1,5 +1,7 @@
 """Semantics tests for ext/pipeline.py (corpus-prep operators)."""
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -305,7 +307,8 @@ def test_example_pipeline_runs(spark):
     import importlib.util
 
     spec = importlib.util.spec_from_file_location(
-        "corpus_pipeline_example", "/root/repo/examples/corpus_pipeline.py"
+        "corpus_pipeline_example",
+        os.path.join(os.path.dirname(__file__), "..", "examples", "corpus_pipeline.py"),
     )
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)

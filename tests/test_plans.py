@@ -3,6 +3,7 @@ the parquet scans, schemas are pruned, small dims broadcast, theta joins
 use nested-loop, scans-only pipelines have zero exchanges. These pin the
 properties that make the same code viable at 100 TB."""
 
+import os
 import re
 
 import pytest
@@ -12,6 +13,7 @@ from bq_duckdb_spark.ext import dedup, dedup_portable, fuzzy
 from bq_duckdb_spark.plans import audit_plan
 
 SF = "/root/testdata/sf0.001"
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 @pytest.fixture(scope="module")
@@ -161,10 +163,10 @@ def test_unpartitioned_window_list_is_closed():
     window cannot land silently (see the audit for per-file reasons)."""
     import sys
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, os.path.join(ROOT, "tools"))
     from audit_plans import audit_unpartitioned_windows
 
-    assert audit_unpartitioned_windows("/root/repo") == []
+    assert audit_unpartitioned_windows(ROOT) == []
 
 
 def _docs(spark):
@@ -212,10 +214,12 @@ def test_bucket_cap_limits_before_collect(spark, build, keys, max_exchanges):
     max_bucket items of a degenerate bucket (e.g. a giant
     exact-duplicate block).
 
-    The limit runs after the exchange only: the exchange pin
-    (operators/buckets.py) replaces the ENSURE_REQUIREMENTS exchange
-    below which Spark would add a map-side Partial limit, so a
-    degenerate bucket still ships whole before it is pruned."""
+    The limit runs on both sides of the exchange: a map-side
+    ``WindowGroupLimit … Partial`` below it prunes a degenerate bucket
+    before it ships, and the ``… Final`` one above it caps what the
+    reducer collects. The exchange is the plain ENSURE_REQUIREMENTS one
+    (no operator pins a repartition; see get_spark's partitioning
+    policy)."""
     a = audit_plan(build(spark))
     assert a.exchanges <= max_exchanges, f"window must share the agg shuffle\n{a.formatted}"
     assert a.formatted.count("WindowGroupLimit") >= 2, (
@@ -242,6 +246,22 @@ def test_bucket_cap_limits_before_collect(spark, build, keys, max_exchanges):
     assert "WindowGroupLimit" in between, (
         f"no rank limit between the bucket exchange and collect_list: "
         f"{between}\n{a.formatted}"
+    )
+    # the limit's mode per node id, and the nodes of the map side: from
+    # the bucket exchange down to the next exchange or scan
+    mode = dict(re.findall(
+        r"^\((\d+)\) WindowGroupLimit\s*\n(?:(?!\n\().)*, (Partial|Final)\n",
+        a.formatted, re.MULTILINE | re.DOTALL,
+    ))
+    above = [mode.get(m.group(2)) for m in node[agg + 1:e] if m]
+    below = []
+    for m in node[e + 1:]:
+        if not m or m.group(1) in ("Exchange", "Scan"):
+            break
+        below.append(mode.get(m.group(2)))
+    assert "Final" in above, f"no Final rank limit above the exchange\n{a.formatted}"
+    assert "Partial" in below, (
+        f"no map-side Partial rank limit below the bucket exchange\n{a.formatted}"
     )
 
 

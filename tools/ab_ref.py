@@ -1,13 +1,14 @@
 """Generic fresh-subprocess A/B for a queries() entry across two git
 refs (SIMHASH_r9.md / PERCENTILE_r10.md protocol, made reusable).
 
-Arms are git worktrees (created on demand under /tmp/abref_<sha>); the
-"work" arm is the current working tree (/root/repo) so uncommitted
-changes can be measured before committing. Each sample is a FRESH
-subprocess that imports __spark_entry__ from its arm's checkout, warms
-the query once, then times one noop write — alternating arm order so
-session-level JIT/GC/page-cache state cannot bias an arm. Trimmed mean
-(drop min+max) + 95% CI half-width per arm.
+Arms are ``git archive`` exports of a ref (made on demand under the
+temp directory as abref_<sha>); the "work" arm is the checkout this
+tool runs from, so uncommitted changes can be measured before
+committing. Each sample is a FRESH subprocess that imports
+__spark_entry__ from its arm's checkout, warms the query once, then
+times one noop write — alternating arm order so session-level
+JIT/GC/page-cache state cannot bias an arm. Trimmed mean (drop
+min+max) + 95% CI half-width per arm.
 
 Usage:
   python tools/ab_ref.py <query> <refA> <refB> [n_per_arm]
@@ -22,11 +23,12 @@ import os
 import statistics
 import subprocess
 import sys
+import tempfile
 import time
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
-REPO = "/root/repo"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _child(repo_dir: str, query: str) -> None:
@@ -42,19 +44,20 @@ def _child(repo_dir: str, query: str) -> None:
     print(f"ABREF_SEC {time.time() - t0:.4f}")
 
 
-def _worktree_for(ref: str) -> str:
+def _checkout_for(ref: str) -> str:
     if ref == "work":
         return REPO
     sha = subprocess.run(
         ["git", "-C", REPO, "rev-parse", "--short", ref],
         capture_output=True, text=True, check=True,
     ).stdout.strip()
-    path = f"/tmp/abref_{sha}"
+    path = os.path.join(tempfile.gettempdir(), f"abref_{sha}")
     if not os.path.isdir(path):
-        subprocess.run(
-            ["git", "-C", REPO, "worktree", "add", "--detach", path, sha],
-            check=True, capture_output=True,
-        )
+        os.makedirs(path)
+        archive = subprocess.run(
+            ["git", "-C", REPO, "archive", sha], capture_output=True, check=True
+        ).stdout
+        subprocess.run(["tar", "-x", "-C", path], input=archive, check=True)
     return path
 
 
@@ -92,7 +95,7 @@ def main() -> None:
         return
     query, ref_a, ref_b = sys.argv[1:4]
     n = int(sys.argv[4]) if len(sys.argv) > 4 else 5
-    dirs = {ref_a: _worktree_for(ref_a), ref_b: _worktree_for(ref_b)}
+    dirs = {ref_a: _checkout_for(ref_a), ref_b: _checkout_for(ref_b)}
     samples: dict[str, list[float]] = {ref_a: [], ref_b: []}
     order = [ref_a, ref_b]
     for i in range(n):

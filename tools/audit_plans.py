@@ -17,10 +17,12 @@ built, never executed — it finishes in seconds per entry).
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 # global-funnel exceptions: entries whose spec genuinely requires a
 # total order or global quantile, each documented + twinned with a
@@ -185,10 +187,10 @@ def main() -> int:
     prefix = sys.argv[2] if len(sys.argv) > 2 else ""
     spark = get_spark(app_name="plan-audit", cpus=8)
     bad = 0
-    for p in audit_unpartitioned_windows("/root/repo"):
+    for p in audit_unpartitioned_windows(ROOT):
         print(f"FLAG {p}")
         bad += 1
-    for p in audit_plain_explodes("/root/repo"):
+    for p in audit_plain_explodes(ROOT):
         print(f"FLAG {p}")
         bad += 1
     for name, fn in sorted(entry.queries().items()):

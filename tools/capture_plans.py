@@ -12,7 +12,8 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import __spark_entry__ as entrymod
 from bench import BENCH_QUERIES, TWIN_QUERIES
@@ -24,7 +25,7 @@ def main() -> None:
     suffix = sys.argv[2] if len(sys.argv) > 2 else "before"
     only = sys.argv[3:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    out_dir = os.path.join("/root/repo/plans", tag)
+    out_dir = os.path.join(ROOT, "plans", tag)
     os.makedirs(out_dir, exist_ok=True)
 
     spark = get_spark(app_name="capture-plans")

@@ -46,7 +46,7 @@ import subprocess
 import sys
 import time
 
-REPO = "/root/repo"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _run(cmd, log_path, env_extra=None, timeout=14400):

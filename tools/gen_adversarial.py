@@ -31,10 +31,10 @@ every contract entry, oracle, bench query, and tool runs unchanged
 with sf_dir pointed here.
 
 Usage: python tools/gen_adversarial.py [out_dir] [base_sf_dir] [scale]
-Defaults: /root/repo/.advdata  /root/testdata/sf0.1  1.0
+Defaults: .advdata in this checkout, the sf0.1 testdata, 1.0
 ``scale`` < 1 shrinks the hostile blocks (see apply_scale) for the
 reduced, oracle-tractable variant:
-    python tools/gen_adversarial.py /root/repo/.advsmall \\
+    python tools/gen_adversarial.py .advsmall \\
         /root/testdata/sf0.01 0.2
 """
 
@@ -266,7 +266,9 @@ def gen_embeddings(out: str, base: str) -> None:
 
 
 def main() -> None:
-    out = sys.argv[1] if len(sys.argv) > 1 else "/root/repo/.advdata"
+    out = sys.argv[1] if len(sys.argv) > 1 else os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".advdata"
+    )
     base = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"
     if len(sys.argv) > 3:
         apply_scale(float(sys.argv[3]))

@@ -28,7 +28,7 @@ entry, oracle, bench query, and tool runs unchanged with sf_dir
 pointed here.
 
 Usage: python tools/gen_scale.py [out_dir] [base_sf_dir] [replicas]
-Defaults: /root/repo/.sf1  /root/testdata/sf0.1  10
+Defaults: .sf1 in this checkout, the sf0.1 testdata, 10
 """
 
 from __future__ import annotations
@@ -165,7 +165,9 @@ def gen_embeddings(out: str, base: str, replicas: int) -> None:
 
 
 def main() -> None:
-    out = sys.argv[1] if len(sys.argv) > 1 else "/root/repo/.sf1"
+    out = sys.argv[1] if len(sys.argv) > 1 else os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".sf1"
+    )
     base = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"
     replicas = int(sys.argv[3]) if len(sys.argv) > 3 else 10
     os.makedirs(out, exist_ok=True)

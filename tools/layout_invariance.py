@@ -20,7 +20,7 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import hashlib
 
@@ -75,7 +75,7 @@ def main() -> None:
         f"/tmp/layoutinv_{os.path.basename(src.rstrip('/'))}"
         f"_{_src_fingerprint(src)}"
     )
-    spark = get_spark(app_name="layout-invariance", cpus=8, shuffle_partitions=8)
+    spark = get_spark(app_name="layout-invariance", cpus=8)
     relayout(spark, src, dst)
 
     qs = {

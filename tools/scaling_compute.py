@@ -16,7 +16,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import __spark_entry__ as entrymod
 from bq_duckdb_spark import get_spark
@@ -38,7 +39,7 @@ ENTRIES = [
 
 def main() -> None:
     out_path = sys.argv[1]
-    sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/repo/.sf1"
+    sf_dir = sys.argv[2] if len(sys.argv) > 2 else os.path.join(ROOT, ".sf1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     spark = get_spark(app_name=f"scaling-compute-{cpus}", cpus=cpus)
     qs = entrymod.queries()
